@@ -16,13 +16,17 @@ Physical shape: all row rules are compiled into ONE fused ``select`` — a
 single scan of the snapshot; each dataset rule contributes its own
 aggregation/join topology. Verdicts derive from violation counts joined
 against the full (partition × rule) grid so zero-violation pairs still get a
-PASS row.
+PASS row. ``ValidationRun.run`` materialises that grid ONCE, in one action,
+and ``verdicts``/``metrics`` read the cached result — sinks, the manifest
+commit, the failing-pair count and the report never re-run the rule
+topology.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -344,15 +348,28 @@ class ValidationRun:
     # ------------------------------------------------------------------
     def run(self, resume: bool = True, persist: bool = True,
             commit_manifest: bool = True) -> ValidationResult:
-        """Execute the suite.
+        """Execute the suite and materialise its (partition × rule) grid.
 
-        ``persist=True`` caches the unioned violations frame (memory+disk)
-        before verdict counts are derived from it — otherwise every consumer
-        (verdict matrix, metrics, sink writes) re-executes the whole rule
+        One action builds the grid: a single job graph counts violations
+        per pair and rows per partition, and the result is persisted in one
+        partition (metadata-sized, so each grid sink is one file).
+        ``verdicts`` is that cached frame and ``metrics`` a projection of
+        it, so every consumer reads the grid instead of re-running the
+        rules. The caller releases the caches with ``verdicts.unpersist()``
+        and ``violations.unpersist()``.
+
+        ``metrics.duration_ms`` is the wall time of that grid action —
+        executing every rule, the counts and, with ``persist=True``,
+        filling the violations cache — not plan construction.
+        ``metrics.committed_at`` is stamped once, when it ends, so every
+        write of this run's metrics carries the same value.
+
+        ``persist=True`` also caches the unioned violations frame
+        (memory+disk), or the violations sink re-executes the whole rule
         topology. At cluster scale the equivalent is writing violations to
-        their sink table first and computing verdicts from the written data;
-        violations are a small fraction of the input, so caching them is
-        bounded by the defect rate, not the snapshot size.
+        their sink table first; violations are a small fraction of the
+        input, so caching them is bounded by the defect rate, not the
+        snapshot size.
 
         ``commit_manifest=False`` skips the internal manifest commit so the
         caller can write its sinks FIRST and commit afterwards (the resume
@@ -378,7 +395,6 @@ class ValidationRun:
             # Partition pruning for resume: only rescan partitions with work.
             docs = docs.filter(F.col(p).isin(pending_parts))
 
-        t0 = time.time()
         parts = docs.groupBy(F.col(p).alias("partition")).agg(
             F.count("*").alias("rows_scanned")
         )
@@ -389,13 +405,7 @@ class ValidationRun:
                 rule.build(docs, self.ctx).select(*VIOLATION_COLUMNS)
             )
 
-        # rule dimension carries each rule's verdict BUDGET (ppm of scanned
-        # rows allowed to violate before the partition fails; 0 = strict)
-        rules_dim = self.spark.createDataFrame(
-            self.rules.rule_budgets,
-            "rule_id string, max_violation_ppm long",
-        )
-        grid = parts.crossJoin(F.broadcast(rules_dim))
+        grid = self._with_rules(parts)
         if pending_pairs is not None:
             grid = grid.join(pending_pairs, ["partition", "rule_id"], "left_semi")
             violations = violations.join(
@@ -407,6 +417,9 @@ class ValidationRun:
         counts = violations.groupBy("partition", "rule_id").agg(
             F.count("*").alias("violation_count")
         )
+        # metadata-sized (partitions × rules): one partition keeps each grid
+        # sink one file; cached JVM-side, so no consumer re-runs the rules
+        # or starts Python workers
         verdicts = (
             grid.join(counts, ["partition", "rule_id"], "left")
             .select(
@@ -425,9 +438,14 @@ class ValidationRun:
                 <= F.col("max_violation_ppm") * F.col("rows_scanned"),
             )
             .select("partition", "rule_id", "pass", "violation_count", "rows_scanned")
+            .coalesce(1)
+            .persist()
         )
+        started = time.perf_counter()
+        verdicts.count()
+        duration_ms = int((time.perf_counter() - started) * 1000)
+        committed_at = datetime.now(timezone.utc)
 
-        duration_ms = int((time.time() - t0) * 1000)
         metrics = verdicts.select(
             "partition",
             "rule_id",
@@ -436,22 +454,29 @@ class ValidationRun:
             "rows_scanned",
             "violation_count",
             F.lit(duration_ms).alias("duration_ms"),
-            F.current_timestamp().alias("committed_at"),
+            F.lit(committed_at).alias("committed_at"),
         )
         if self.manifest is not None and commit_manifest:
             self.manifest.commit(metrics)
         return ValidationResult(verdicts, violations, metrics)
 
     # ------------------------------------------------------------------
+    def _with_rules(self, frame: DataFrame) -> DataFrame:
+        """``frame`` × the suite's rules and their verdict BUDGETs (ppm of
+        scanned rows allowed to violate; 0 = strict), generated from
+        literals: no Python-built relation for the plan to broadcast."""
+        rules = F.array(*[
+            F.struct(F.lit(rid).alias("rule_id"),
+                     F.lit(ppm).alias("max_violation_ppm"))
+            for rid, ppm in self.rules.rule_budgets
+        ]).cast("array<struct<rule_id:string,max_violation_ppm:bigint>>")
+        return frame.select("*", F.inline(rules))
+
     def _planned_grid(self, docs: DataFrame) -> DataFrame:
         p = self.ctx.partition_col
-        rules_dim = self.spark.createDataFrame(
-            [(rid,) for rid in self.rules.rule_ids], "rule_id string"
-        )
-        return (
+        return self._with_rules(
             docs.select(F.col(p).alias("partition")).distinct()
-            .crossJoin(F.broadcast(rules_dim))
-        )
+        ).select("partition", "rule_id")
 
     def _empty_verdicts(self) -> DataFrame:
         return self.spark.createDataFrame(

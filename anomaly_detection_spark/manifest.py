@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,11 +35,16 @@ class RuleProgressManifest:
         self.path = path
 
     def read(self) -> DataFrame:
+        """Every committed row; empty only when no commit exists yet. Any
+        other read error propagates: an empty manifest would silently turn
+        a resume into a full re-evaluation."""
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
                 os.path.join(self.path, "*", "*.parquet")
             )
-        except Exception:
+        except AnalysisException as exc:
+            if exc.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
     def commit(self, metrics: DataFrame) -> None:

@@ -441,35 +441,6 @@ def main(argv: list[str] | None = None) -> int:
             ).write.mode("overwrite").parquet(
                 f"{args.output}/checksum_reconcile")
 
-    if result.nothing_pending:
-        # every planned pair is already committed: leave the existing sink
-        # outputs untouched (overwriting them with the empty frames would
-        # clobber the previous run's real results) — but still refresh the
-        # requested derived outputs (diff, histograms, quarantine), or a
-        # stale/absent one from an earlier run would linger: they derive
-        # from the input + the already-complete sinks, not from this run's
-        # (empty) increment
-        if args.diff_prev:
-            write_verdict_diff(spark.read.parquet(args.diff_prev).localCheckpoint())
-        if args.emit_histograms:
-            # idempotent: re-running snapshot S only rewrites subdir S
-            write_histograms()
-        if args.quarantine:
-            write_quarantine()
-        if args.cooccurrence_report:
-            write_cooccurrence()
-        if args.slice_dims:
-            write_slices()
-        if args.fingerprint_cols:
-            write_fingerprints()
-        if args.emit_checksums:
-            write_checksums()
-        print(f"VALIDATION_DONE snapshot={args.snapshot_id} failing_pairs=0 "
-              "(resume: nothing pending, outputs unchanged)")
-        if owns_session:
-            spark.stop()
-        return 0
-
     # Write order is the resume contract: data first, manifest last — a crash
     # between the sink writes and the commit re-evaluates, never skips.
     # Mode: a resumed run with prior commits only computes NEW pairs, so it
@@ -479,34 +450,36 @@ def main(argv: list[str] | None = None) -> int:
     # pairs pending, and the retry must not append their rows a second time
     # — each sink drops pairs it already holds (see append_missing_pairs).
     # With Iceberg/Delta sinks all of this becomes one atomic commit.
+    # When a resume finds nothing pending, the sinks and the manifest are
+    # left untouched (the empty frames would clobber the previous run's
+    # real results), but every requested derived output is still refreshed:
+    # they derive from the input and the complete sinks, not the increment.
     prev_verdicts = None
     if args.diff_prev:
         # materialize BEFORE the sink writes: --diff-prev may name this
         # run's own verdicts dir, which mode=overwrite is about to replace
         prev_verdicts = spark.read.parquet(args.diff_prev).localCheckpoint()
 
-    # Sink policy, not engine semantics: verdict/metric counts were already
-    # derived from the FULL (persisted) violations frame inside run(), so
-    # capping here bounds what lands on disk without touching correctness.
-    sink_violations = result.violations
-    if args.max_violations_per_pair is not None:
-        from anomaly_detection_spark.engine import cap_violations
+    if not result.nothing_pending:
+        # Sink policy, not engine semantics: verdict/metric counts were
+        # already derived from the FULL violations frame inside run(), so
+        # capping here bounds what lands on disk without touching
+        # correctness.
+        sink_violations = result.violations
+        if args.max_violations_per_pair is not None:
+            from anomaly_detection_spark.engine import cap_violations
 
-        sink_violations = cap_violations(
-            result.violations, args.max_violations_per_pair)
-
-    mode = "overwrite"
-    if args.resume and manifest is not None:
-        if manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0:
-            mode = "append"
-    if mode == "append":
-        append_missing_pairs(spark, sink_violations, f"{args.output}/violations")
-        append_missing_pairs(spark, result.verdicts, f"{args.output}/verdicts")
-        append_missing_pairs(spark, result.metrics, f"{args.output}/metrics")
-    else:
-        sink_violations.write.mode(mode).parquet(f"{args.output}/violations")
-        result.verdicts.write.mode(mode).parquet(f"{args.output}/verdicts")
-        result.metrics.write.mode(mode).parquet(f"{args.output}/metrics")
+            sink_violations = cap_violations(
+                result.violations, args.max_violations_per_pair)
+        sinks = {"violations": sink_violations, "verdicts": result.verdicts,
+                 "metrics": result.metrics}
+        append = args.resume and manifest is not None and (
+            manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0)
+        for name, df in sinks.items():
+            if append:
+                append_missing_pairs(spark, df, f"{args.output}/{name}")
+            else:
+                df.write.mode("overwrite").parquet(f"{args.output}/{name}")
     if prev_verdicts is not None:
         write_verdict_diff(prev_verdicts)
     if args.export_csv:
@@ -516,6 +489,7 @@ def main(argv: list[str] | None = None) -> int:
         spark.read.parquet(f"{args.output}/violations").write.mode(
             "overwrite").option("header", True).csv(args.export_csv)
     if args.emit_histograms:
+        # idempotent: re-running snapshot S only rewrites subdir S
         write_histograms()
     if args.quarantine:
         write_quarantine()
@@ -527,59 +501,47 @@ def main(argv: list[str] | None = None) -> int:
         write_fingerprints()
     if args.emit_checksums:
         write_checksums()
-    if manifest is not None:
+    if manifest is not None and not result.nothing_pending:
         manifest.commit(result.metrics)
 
-    n_fail = result.verdicts.filter("NOT pass").count()
+    # the grid is metadata-sized and cached: collect it once, roll up here
+    grid = result.verdicts.collect()
+    n_fail = sum(not r["pass"] for r in grid)
     if args.report_json:
-        # S4: small driver-side JSON summary over the (already tiny) verdict
-        # grid — per-rule rollup, not per-row data (safe to collect)
+        # S4: small driver-side JSON summary — per-rule and per-partition
+        # roll-ups of this run's verdict grid, never per-row data
         import json
+        from itertools import groupby
 
-        from pyspark.sql import functions as F
+        def rollup(key):
+            """(value, rows) groups of the grid by ``key``, ascending with
+            NULL first, as Spark's orderBy sorts them."""
+            rows = sorted(grid, key=lambda r: (r[key] is not None, r[key]))
+            return ((k, list(g)) for k, g in groupby(rows, lambda r: r[key]))
 
         per_rule = [
-            r.asDict()
-            for r in result.verdicts.groupBy("rule_id").agg(
-                F.count("*").alias("partitions"),
-                F.sum((~F.col("pass")).cast("long")).alias("failing_partitions"),
-                F.sum("violation_count").alias("violations"),
-            ).orderBy("rule_id").collect()
+            {"rule_id": rid, "partitions": len(rs),
+             "failing_partitions": sum(not r["pass"] for r in rs),
+             "violations": sum(r["violation_count"] for r in rs)}
+            for rid, rs in rollup("rule_id")
         ]
         # per-partition narrative rollup (≈ report_generator.py:358-482
         # generate_user_report/generate_department_report recast per
-        # partition): top-3 failing rules by violations, totals, verdict
-        # line — still the metadata-sized verdict grid, never row data
-        top_fail = F.slice(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        ~F.col("pass"),
-                        F.struct(
-                            (-F.col("violation_count")).alias("_neg"),
-                            F.col("rule_id"),
-                            F.col("violation_count").alias("violations"),
-                        ),
-                    )
-                )
-            ),
-            1, 3,
-        )
+        # partition): top-3 failing rules by violations, totals
         per_part = [
             {
-                "partition": r["partition"],
-                "rules_failing": r["rules_failing"],
-                "violations": r["violations"],
+                "partition": part,
+                "rules_failing": sum(not r["pass"] for r in rs),
+                "violations": sum(r["violation_count"] for r in rs),
                 "top_failing_rules": [
-                    {"rule_id": t["rule_id"], "violations": t["violations"]}
-                    for t in (r["top"] or [])
+                    {"rule_id": r["rule_id"], "violations": r["violation_count"]}
+                    for r in sorted(
+                        (r for r in rs if not r["pass"]),
+                        key=lambda r: (-r["violation_count"], r["rule_id"]),
+                    )[:3]
                 ],
             }
-            for r in result.verdicts.groupBy("partition").agg(
-                F.sum((~F.col("pass")).cast("long")).alias("rules_failing"),
-                F.sum("violation_count").alias("violations"),
-                top_fail.alias("top"),
-            ).orderBy("partition").collect()
+            for part, rs in rollup("partition")
         ]
         report = {"snapshot_id": args.snapshot_id, "failing_pairs": n_fail,
                   "rules": per_rule, "partitions": per_part}
@@ -594,6 +556,8 @@ def main(argv: list[str] | None = None) -> int:
                 .orderBy("partition", "rule_id").collect()
             ]
         if args.diff_prev:
+            from pyspark.sql import functions as F
+
             diff = spark.read.parquet(f"{args.output}/verdict_diff")
             report["verdict_diff"] = {
                 r["status"]: r["n"]
@@ -603,6 +567,8 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.report_json, "w") as fh:
             json.dump(report, fh, indent=2)
     print(f"VALIDATION_DONE snapshot={args.snapshot_id} failing_pairs={n_fail}")
+    result.verdicts.unpersist()
+    result.violations.unpersist()
     if owns_session:
         spark.stop()
     return 0

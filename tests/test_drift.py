@@ -171,11 +171,12 @@ def test_psi_from_stored_hist_matches_rescan(spark, snapshots, tmp_path):
 
 
 def test_nothing_pending_still_writes_derived_outputs(spark, snapshots,
-                                                      tmp_path):
+                                                      tmp_path, capsys):
     """A fully-committed resumed run must still produce the REQUESTED
-    derived outputs (histograms, quarantine) — they derive from the input
-    and the complete sinks, not from the (empty) increment; skipping them
-    silently returned rc=0 without the drift baseline or routed corpus."""
+    derived outputs (histograms, quarantine, report, CSV export) — they
+    derive from the input and the complete sinks, not from the (empty)
+    increment; skipping them silently returned rc=0 without the drift
+    baseline, routed corpus, report or export."""
     import run_validation
 
     cur, _ = snapshots
@@ -197,10 +198,22 @@ def test_nothing_pending_still_writes_derived_outputs(spark, snapshots,
     assert run_validation.main(common) == 0
     # second run: everything committed -> nothing pending; derived outputs
     # requested only now must still be produced
+    capsys.readouterr()
     assert run_validation.main(common + [
         "--resume", "--emit-histograms",
         "--quarantine", str(tmp_path / "routed"),
+        "--report-json", str(tmp_path / "report.json"),
+        "--export-csv", str(tmp_path / "csv"),
     ]) == 0
+    line = [ln for ln in capsys.readouterr().out.splitlines()
+            if "VALIDATION_DONE" in ln][0]
+    assert int(line.rsplit("=", 1)[1]) == 0
+    import json
+
+    with open(tmp_path / "report.json") as fh:
+        report = json.load(fh)
+    assert report["snapshot_id"] == "s1" and report["failing_pairs"] == 0
+    assert (tmp_path / "csv" / "_SUCCESS").exists()
     hist = spark.read.parquet(str(tmp_path / "out" / "span_kind_hist"))
     assert hist.count() > 0
     routed = spark.read.parquet(str(tmp_path / "routed"))

@@ -58,3 +58,86 @@ def test_partial_commit_resume(spark, docs, manifest):
     }
     for r in resumed.verdicts.collect():
         assert full_map[(r["partition"], r["rule_id"])] == (r["pass"], r["violation_count"])
+
+
+def test_manifest_read_propagates_errors_other_than_absent_path(spark):
+    """Only a manifest that was never committed reads as empty; any other
+    read error must surface, or a resume silently re-evaluates everything."""
+    with pytest.raises(Exception, match="nosuchfs"):
+        RuleProgressManifest(spark, "nosuchfs://b/m").read().count()
+
+
+def test_duration_ms_times_the_grid_action(spark, docs):
+    """duration_ms is the execution time of the grid action, so a dataset
+    rule that sleeps while it runs shows up in it in full."""
+    import time
+
+    from anomaly_detection_spark.rules.core import DatasetRule
+
+    sleep_s = 1.5
+
+    @F.udf("string")
+    def slow(n):
+        time.sleep(sleep_s)
+        return None
+
+    def build(d, ctx):
+        return d.groupBy().count().select(
+            F.lit(None).cast("string").alias("partition"),
+            F.lit("slow").alias("rule_id"),
+            F.lit(None).cast("string").alias("doc_id"),
+            slow("count").alias("detail"),
+        ).filter("detail IS NOT NULL")
+
+    suite = RuleSet(row_rules=[builtin.not_null("doc_id")],
+                    dataset_rules=[DatasetRule("slow", build)])
+    res = ValidationRun(spark, docs, suite).run(resume=False)
+    rows = res.metrics.collect()
+    assert {r["rule_id"] for r in rows} == {"not_null:doc_id", "slow"}
+    assert min(r["duration_ms"] for r in rows) >= sleep_s * 1000
+    res.verdicts.unpersist()
+    res.violations.unpersist()
+
+
+@pytest.fixture()
+def main_args(docs, catalog, tmp_path):
+    docs.write.parquet(str(tmp_path / "docs"))
+    catalog.write.parquet(str(tmp_path / "catalog"))
+    return ["--input", str(tmp_path / "docs"),
+            "--catalog", str(tmp_path / "catalog"),
+            "--output", str(tmp_path / "out"),
+            "--manifest", str(tmp_path / "manifest"),
+            "--snapshot-id", "s1"]
+
+
+def test_metrics_sink_and_manifest_share_committed_at(spark, main_args,
+                                                      tmp_path):
+    """One run stamps one committed_at: the metrics sink and the manifest
+    commit carry the same instant, not one evaluated per write."""
+    import run_validation
+
+    assert run_validation.main(main_args) == 0
+
+    def stamps(df):
+        return {r[0] for r in df.select("committed_at").distinct().collect()}
+
+    sink = stamps(spark.read.parquet(str(tmp_path / "out" / "metrics")))
+    committed = stamps(
+        RuleProgressManifest(spark, str(tmp_path / "manifest")).read())
+    assert len(sink) == 1
+    assert sink == committed
+
+
+def test_main_releases_its_caches(spark, main_args):
+    """main unpersists the violations and the verdict grid it cached: no
+    RDD it persisted is still registered when it returns. (Compared by id,
+    not by count: the registry holds RDDs weakly, so other tests' leftovers
+    may be collected while main runs.)"""
+    import run_validation
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    assert run_validation.main(main_args) == 0
+    assert persisted() - before == set()
