@@ -25,7 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     Documents become (doc_id, spans, partition=source) with a text span and a
     media span each; the engine then runs the default rule suite + uniqueness
-    + referential + Arrow span-sequence checks and returns the per-partition
+    + referential + span-sequence checks and returns the per-partition
     pass/fail verdict matrix.
     """
     from pyspark.sql import functions as F
@@ -57,9 +57,8 @@ def entry(spark: SparkSession) -> DataFrame:
         F.concat(F.lit("m"), F.col("id").cast("string")).alias("media_ref")
     )
     rules = RuleSet(
-        # span_sequence_valid rides the fused single-scan row pass (one
-        # ArrowEvalPython node) — the dataset-rule form would cost an
-        # extra scan topology per run and is kept only for topology tests
+        # span_sequence_valid rides the fused single-scan row pass as a
+        # native expression: no Python worker on the validation path
         row_rules=builtin.default_document_rules()
         + [builtin.no_pii(), builtin.span_sequence_valid_row()],
         dataset_rules=[

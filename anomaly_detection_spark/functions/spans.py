@@ -1,11 +1,12 @@
 """Arrow-vectorized UDFs over the nested ``spans`` column.
 
-These are the engine's only Python hot-path functions; everything else is
-JVM-side Column expressions. They exist because the BASELINE.json input_hint
-pins the per-row invariant — *span-sequence equality (kind, text, media_ref,
-order) verified by sorting spans by offset inside an Arrow UDF* — and because
-``array<struct<...>>`` must round-trip through Arrow (exercised by tests
-early, SURVEY.md §7 "what's hard").
+No engine path calls these: the validation suite's rules are JVM-side Column
+expressions. They pin the BASELINE.json input_hint invariant in its literal
+form — *span-sequence equality (kind, text, media_ref, order) verified by
+sorting spans by offset inside an Arrow UDF* — and serve as the oracle the
+native rule ``rules.builtin.span_sequence_valid_row`` is tested against
+byte for byte; they also exercise the ``array<struct<...>>`` round trip
+through Arrow (SURVEY.md §7 "what's hard").
 
 Each UDF receives an Arrow batch as a pandas Series whose elements are the
 span lists; work happens per batch, never per Spark row in the executor loop.
@@ -81,39 +82,6 @@ def span_sequence_invalid_reason(spans: pd.Series) -> pd.Series:
         return None
 
     return pd.Series([check(s) for s in spans], index=spans.index, dtype="object")
-
-
-@F.pandas_udf(StringType())
-def offsets_invalid_reason(offsets: pd.Series) -> pd.Series:
-    """Offsets-only twin of ``span_sequence_invalid_reason`` — identical
-    verdicts and reason strings, but takes ``transform(spans, s -> s.offset)``
-    so only the int32 offset arrays cross the Arrow boundary (the kind/text/
-    media_ref payloads stay JVM-side; ~4× less transfer on text-heavy docs).
-
-    NULL *element* semantics match exactly: a NULL spans column arrives here
-    as NULL (callers must pass ``when(spans.isNull(), NULL)`` — ``transform``
-    of NULL is NULL, so that is automatic)."""
-
-    def check(offs):
-        if offs is None:
-            return "spans is NULL"
-        offs = list(offs)
-        # Arrow hands an int32 array containing nulls to pandas as float64
-        # with NaN — `o is None` never fires and int(NaN) raises — so the
-        # NULL-element test must be pd.isna (covers None AND NaN; the
-        # full-struct UDF sees None and is covered by the same predicate).
-        if any(pd.isna(o) for o in offs):
-            return "NULL offset"
-        neg = [int(o) for o in offs if o < 0]
-        if neg:
-            return f"negative offsets: {sorted(neg)}"
-        srt = sorted(int(o) for o in offs)
-        dups = sorted({a for a, b in zip(srt, srt[1:]) if a == b})
-        if dups:
-            return f"duplicate offsets: {dups}"
-        return None
-
-    return pd.Series([check(o) for o in offsets], index=offsets.index, dtype="object")
 
 
 @F.pandas_udf(LongType())

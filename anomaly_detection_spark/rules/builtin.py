@@ -1,18 +1,16 @@
 """Builtin constraint rules for the interleaved-documents table.
 
 Row rules are pure Column expressions (fused by the engine into one scan).
+``span_sequence_valid_row`` is one of them: offsets non-NULL, non-negative
+and pairwise distinct, with the reason strings of the Arrow UDF
+``functions.spans.span_sequence_invalid_reason`` (parity-tested).
 Dataset rules carry their own distributed topology:
 
-* ``unique``              — doc_id uniqueness; two strategies: JVM hash-agg
-                            (map-side partial agg, one shuffle) and the
-                            north_rule's explicit ``repartitionByRange`` +
-                            per-range Arrow pass (provably equivalent; tested).
+* ``unique``              — doc_id uniqueness via a JVM hash-agg (map-side
+                            partial agg, one shuffle).
 * ``referential``         — dangling ``media_ref`` vs the media catalog via a
                             *broadcast left-anti join* (≈ the reference's LDAP
                             dimension lookup, SURVEY.md J2).
-* ``span_sequence_valid`` — offsets sortable/unique/non-negative, verified by
-                            the Arrow UDF that sorts spans by offset
-                            (BASELINE.json input_hint invariant).
 """
 
 from __future__ import annotations
@@ -21,7 +19,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.rules.core import DatasetRule, RowRule, RuleContext
-from anomaly_detection_spark.functions.spans import offsets_invalid_reason
 from anomaly_detection_spark.functions.text import encoding_anomaly_count
 
 
@@ -206,7 +203,7 @@ def text_encoding_clean(spans_col: str = "spans",
     # ``transform(spans, s -> s.text)`` — expressions inside higher-order-
     # function lambdas block parquet nested-schema pruning, which would
     # make the scan read the media payloads too (same discipline as
-    # span_sequence_prescreen; plan-pinned)
+    # span_sequence_valid_row; plan-pinned)
     n_bad = F.aggregate(
         F.col(f"{spans_col}.text"),
         F.lit(0).cast("long"),
@@ -234,10 +231,10 @@ def media_ref_present_on_media_spans(spans_col: str = "spans") -> RowRule:
 
 def offsets_valid_native(spans_col: str = "spans") -> RowRule:
     """Offsets non-null, non-negative and strictly increasing once sorted
-    (i.e. unique) — the same invariant the Arrow rule enforces.
+    (i.e. unique) — the invariant ``span_sequence_valid_row`` enforces.
 
-    Pure-expression twin of the Arrow-UDF dataset rule: sort offsets with
-    ``array_sort`` and compare neighbours with ``zip_with`` — no Python.
+    Sorts offsets with ``array_sort`` and compares neighbours with
+    ``zip_with`` — no Python.
     """
     offs = F.array_sort(F.transform(F.col(spans_col), lambda s: s["offset"]))
     has_null = F.exists(offs, lambda o: o.isNull())
@@ -257,68 +254,71 @@ def offsets_valid_native(spans_col: str = "spans") -> RowRule:
     )
 
 
+def _int_list(arr: Column) -> Column:
+    """Python's ``str(list_of_ints)`` for an int array: ``[-3, -1]``."""
+    return F.concat(F.lit("["),
+                    F.array_join(F.transform(arr, lambda o: o.cast("string")), ", "),
+                    F.lit("]"))
+
+
 def span_sequence_valid_row(spans_col: str = "spans",
                             rule_id: str = "span_sequence_valid") -> RowRule:
-    """Fused-pass form of the Arrow span-sequence check: the offsets-only
-    UDF result is bound once as a column, so the whole check rides the same
-    single scan as every other row rule (one ArrowEvalPython node, zero
-    extra passes). Semantically identical to the ``span_sequence_valid``
-    dataset rule (same rule_id, verdicts, details) — prefer this one; the
-    dataset-rule form remains for topology tests."""
-    reason = "_span_seq_reason"
+    """Span-sequence validity (the input_hint invariant): sorting spans by
+    offset yields a strict order — offsets non-NULL, non-negative and
+    pairwise distinct. Empty span lists pass (``non_empty`` owns them).
+
+    Pure Column expression over the ``spans.offset`` bind the default suite
+    also makes, so it rides the fused single scan with no Python and the
+    scan reads only the offsets (NULL is tested on ``spans.offset``, not on
+    ``spans``, which would stop nested-schema pruning). Details are
+    byte-identical to ``span_sequence_invalid_reason``, in its order:
+    ``spans is NULL``, ``NULL offset``, ``negative offsets: [..]`` (sorted,
+    repeats kept), ``duplicate offsets: [..]`` (sorted, distinct)."""
+    offs_bound = "_span_offs"
+    offs = F.col(offs_bound)
+    has_null = F.exists(offs, lambda o: o.isNull())
+    has_neg = F.exists(offs, lambda o: o < 0)
+    srt = F.array_sort(offs)
+    dups = F.array_distinct(
+        F.filter(srt, lambda x, i: (i > 0) & (F.element_at(srt, i) == x)))
     return RowRule(
         rule_id=rule_id,
-        violation=F.col(reason).isNotNull(),
-        detail=F.col(reason),
-        bind={reason: offsets_invalid_reason(
-            F.transform(F.col(spans_col), lambda s: s["offset"])
-        )},
+        violation=offs.isNull() | has_null | has_neg
+        | (F.size(F.array_distinct(offs)) < F.size(offs)),
+        detail=F.when(offs.isNull(), F.lit("spans is NULL"))
+        .when(has_null, F.lit("NULL offset"))
+        .when(has_neg, F.concat(F.lit("negative offsets: "),
+                                _int_list(F.filter(srt, lambda o: o < 0))))
+        .otherwise(F.concat(F.lit("duplicate offsets: "), _int_list(dups))),
+        bind={offs_bound: F.col(f"{spans_col}.offset")},
     )
 
 
 # ------------------------------------------------------------ dataset rules
 
-def unique(col: str = "doc_id", strategy: str = "hashagg", rule_id: str = "unique:doc_id") -> DatasetRule:
+def unique(col: str = "doc_id", rule_id: str = "unique:doc_id") -> DatasetRule:
     """doc_id uniqueness at 10^12 rows — pure shuffle aggregation, no collect.
 
-    strategy='hashagg': ``groupBy(doc_id).count()`` — Catalyst plans a partial
-    (map-side) count before the single hash shuffle, so each distinct key
-    ships at most one row per map task; the duplicate set then joins back to
-    recover the partitions involved.
-
-    strategy='range': the north_rule's explicit ``repartitionByRange(doc_id)``
-    + per-range Arrow pass — equal keys are co-located by the range
-    partitioner, so duplicates are detected entirely partition-locally
-    (also yields range-clustered output for clustered writes). Tested equal
-    to 'hashagg'.
+    ``groupBy(doc_id)`` with ``count`` and ``collect_set(partition)``:
+    Catalyst plans a partial (map-side) aggregate before the single hash
+    shuffle, so each distinct key ships at most one row per map task, and
+    the partitions of duplicated keys come out of the same aggregate.
     """
 
     def build(docs: DataFrame, ctx: RuleContext) -> DataFrame:
         p, d = ctx.partition_col, ctx.doc_id_col
         keyed = docs.select(F.col(p).alias("partition"), F.col(d).alias("doc_id")) \
                     .filter(F.col("doc_id").isNotNull())
-        if strategy == "range":
-            n = ctx.range_partitions or keyed.sparkSession.conf.get(
-                "spark.sql.shuffle.partitions")
-            ranged = keyed.repartitionByRange(int(n), "doc_id")
-            # Equal keys are co-located ⇒ a partition-local count is global.
-            counts = ranged.groupBy("partition", "doc_id").agg(
-                F.count("*").alias("_n_in_part"))
-            # second tiny agg only over per-(partition,key) rows
-            dup = counts.groupBy("doc_id").agg(F.sum("_n_in_part").alias("_n")) \
-                        .filter(F.col("_n") > 1)
-            hits = counts.join(dup, "doc_id")
-        else:
-            # ONE scan + ONE shuffle: partial (map-side) count + partition
-            # set per key, then explode the partitions of duplicated keys.
-            # No join-back re-scan of the table; collect_set is bounded by
-            # the number of logical partitions a key can appear in.
-            hits = (
-                keyed.groupBy("doc_id")
-                .agg(F.count("*").alias("_n"), F.collect_set("partition").alias("_ps"))
-                .filter(F.col("_n") > 1)
-                .select(F.explode("_ps").alias("partition"), "doc_id", "_n")
-            )
+        # ONE scan + ONE shuffle: partial (map-side) count + partition set
+        # per key, then explode the partitions of duplicated keys. No
+        # join-back re-scan of the table; collect_set is bounded by the
+        # number of logical partitions a key can appear in.
+        hits = (
+            keyed.groupBy("doc_id")
+            .agg(F.count("*").alias("_n"), F.collect_set("partition").alias("_ps"))
+            .filter(F.col("_n") > 1)
+            .select(F.explode("_ps").alias("partition"), "doc_id", "_n")
+        )
         return hits.select(
             F.col("partition"),
             F.lit(rule_id).alias("rule_id"),
@@ -793,58 +793,6 @@ def referential_scalable(catalog_col: str = "media_ref",
                 "doc_id",
                 F.concat(F.lit("dangling media_ref: "), F.col("_refs")).alias("detail"),
             )
-        )
-
-    return DatasetRule(rule_id=rule_id, build=build)
-
-
-def span_sequence_prescreen(spans_col: str = "spans") -> Column:
-    """JVM predicate that is TRUE exactly when the Arrow offsets UDF would
-    return a non-NULL reason: spans NULL, any NULL offset, any negative
-    offset, or duplicate offsets. Mirrors ``offsets_invalid_reason`` check
-    for check (parity-tested) — pure codegen, no Python.
-
-    Offsets are extracted with ``spans.offset`` (GetArrayStructFields), NOT
-    ``transform(spans, s -> s.offset)``: expressions inside higher-order-
-    function lambdas block parquet nested-schema pruning, which would make
-    this scan read the full text/media payloads (plan-pinned by tests)."""
-    offs = F.col(f"{spans_col}.offset")
-    return (
-        F.col(spans_col).isNull()
-        | F.exists(offs, lambda o: o.isNull())
-        | F.exists(offs, lambda o: o < 0)
-        | (F.size(F.array_distinct(offs)) < F.size(offs))
-    )
-
-
-def span_sequence_valid(rule_id: str = "span_sequence_valid",
-                        prescreen: bool = True) -> DatasetRule:
-    """Arrow-UDF path for the input_hint invariant: sort spans by offset
-    inside a vectorized pandas UDF; invalid docs (negative / duplicate
-    offsets) become violations.
-
-    ``prescreen=True`` (the 10^12-row path) first applies the equivalent
-    JVM predicate so only suspect rows — a defect-rate-sized fraction —
-    cross the Arrow boundary for the authoritative sort-by-offset check;
-    Python cost becomes O(violations), not O(rows). Verdicts and reasons
-    are identical either way (the prescreen mirrors the UDF exactly and
-    the equivalence is pinned by tests)."""
-
-    def build(docs: DataFrame, ctx: RuleContext) -> DataFrame:
-        p, d = ctx.partition_col, ctx.doc_id_col
-        src = docs.filter(span_sequence_prescreen()) if prescreen else docs
-        # ship only the offset arrays through Arrow — verdicts and reason
-        # strings are identical to the full-struct UDF (parity-tested)
-        checked = src.select(
-            F.col(p).alias("partition"),
-            F.col(d).alias("doc_id"),
-            offsets_invalid_reason(F.col("spans.offset")).alias("_reason"),
-        )
-        return checked.filter(F.col("_reason").isNotNull()).select(
-            "partition",
-            F.lit(rule_id).alias("rule_id"),
-            "doc_id",
-            F.col("_reason").alias("detail"),
         )
 
     return DatasetRule(rule_id=rule_id, build=build)

@@ -33,9 +33,10 @@ class RowRule:
     ``bind`` maps column names to expressions the engine pre-projects before
     evaluating the fused rule select; ``violation``/``detail`` may then refer
     to them with ``F.col(name)``. Use it when an expression is expensive or
-    must be evaluated exactly once (e.g. an Arrow UDF — referencing a bound
-    attribute keeps it a single ArrowEvalPython node instead of one
-    evaluation in the predicate and another in the detail)."""
+    must be evaluated exactly once (e.g. a UDF — referencing a bound
+    attribute keeps it a single evaluation instead of one in the predicate
+    and another in the detail). Rules that bind the same name to the same
+    expression share one column."""
 
     rule_id: str
     violation: Column
@@ -74,7 +75,6 @@ class RuleContext:
     partition_col: str = "partition"
     doc_id_col: str = "doc_id"
     media_catalog: DataFrame | None = None
-    range_partitions: int | None = None  # for repartitionByRange strategies
 
 
 @dataclass

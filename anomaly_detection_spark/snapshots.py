@@ -222,7 +222,7 @@ def snapshot_diff(
 
     Scale shape: ONE full-outer sort-merge join on the key. On an Iceberg
     layout where both snapshots are written bucketed/sorted by ``key_col``
-    (the engine's ``repartitionByRange(doc_id)`` write discipline), storage
+    (e.g. written with ``repartitionByRange(doc_id)``), storage
     partitioning makes this a co-located merge with no extra shuffle; the
     classification and any rollup aggregate map-side. ``carry`` columns are
     taken from whichever side has the row (cur wins when both do).

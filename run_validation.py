@@ -12,7 +12,7 @@ Cluster deployment (north-rule shape):
         --snapshot-id s42 [--resume]
 
 Reads the snapshot, runs the full fused rule suite (+ uniqueness +
-referential + Arrow span-sequence check), writes three parquet outputs
+referential + span-sequence check), writes three parquet outputs
 (verdicts/, violations/, metrics/) and commits the (partition, rule_id)
 progress manifest last — so an interrupted run re-evaluates, never skips.
 The same script runs unchanged at any parallelism; local smoke:
@@ -189,14 +189,16 @@ def append_missing_pairs(spark, df, path: str,
     from pyspark.errors import AnalysisException
 
     try:
-        existing = spark.read.parquet(path).select(*keys).distinct()
-    except AnalysisException:
+        existing = spark.read.parquet(path)
+    except AnalysisException as exc:
         # first increment: sink doesn't exist yet. ONLY this narrow case may
-        # skip the dedup — a transient read error (listing failure, corrupt
-        # footer) must propagate, or the retry would silently double-append.
-        existing = None
-    if existing is not None:
-        df = df.join(existing, list(keys), "left_anti")
+        # skip the dedup — any other error (listing failure, corrupt footer,
+        # a sink without the key columns) must propagate, or the retry would
+        # silently double-append.
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+    else:
+        df = df.join(existing.select(*keys).distinct(), list(keys), "left_anti")
     df.write.mode("append").parquet(path)
 
 
@@ -225,8 +227,7 @@ def main(argv: list[str] | None = None) -> int:
     catalog = spark.read.parquet(args.catalog)
 
     rules = RuleSet(
-        # span check fused into the single row-rule scan; the dataset-rule
-        # form (span_sequence_valid) stays available for topology tests
+        # native span-sequence check, fused into the single row-rule scan
         row_rules=builtin.default_document_rules()
         + [builtin.no_pii(), builtin.span_sequence_valid_row()],
         dataset_rules=[

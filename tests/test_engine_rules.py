@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from anomaly_detection_spark.engine import ValidationRun
 from anomaly_detection_spark.rules import builtin
-from anomaly_detection_spark.rules.core import RuleContext, RuleSet
+from anomaly_detection_spark.rules.core import RuleSet
 
 
 def _oracle_row_violations(docs_pd: pd.DataFrame) -> set[tuple]:
@@ -47,11 +47,11 @@ def _oracle_row_violations(docs_pd: pd.DataFrame) -> set[tuple]:
 @pytest.fixture(scope="module")
 def result(spark, docs, catalog):
     rules = RuleSet(
-        row_rules=builtin.default_document_rules(),
+        row_rules=builtin.default_document_rules()
+        + [builtin.span_sequence_valid_row()],
         dataset_rules=[
             builtin.unique("doc_id"),
             builtin.referential(),
-            builtin.span_sequence_valid(),
         ],
     )
     run = ValidationRun(spark, docs, rules, media_catalog=catalog)
@@ -104,8 +104,9 @@ def test_referential_exact(result, docs_pd, catalog):
 
 
 def test_span_sequence_arrow_udf_matches_native(result):
-    """input_hint invariant: the Arrow-UDF offset-sort check and the pure
-    Column-expression check flag the same (partition, doc_id) sets."""
+    """input_hint invariant: the span-sequence rule (whose details are
+    parity-tested against the Arrow UDF below) and the default suite's
+    ``offsets_valid_native`` flag the same (partition, doc_id) sets."""
     arrow = {
         (r["partition"], r["doc_id"])
         for r in result.violations.filter("rule_id = 'span_sequence_valid'").collect()
@@ -136,60 +137,63 @@ def test_passfail_matrix(result, docs_pd):
         assert row["rows_scanned"] == sizes[part]
 
 
-def test_span_sequence_row_rule_equivalent_to_dataset_rule(spark, docs, catalog, result):
-    """The fused (bound-column) form of the Arrow span check must emit the
-    exact violation rows of the standalone dataset-rule form."""
-    rules = RuleSet(row_rules=[builtin.span_sequence_valid_row()])
-    fused = ValidationRun(spark, docs, rules, media_catalog=catalog).run(resume=False)
-    a = {
-        (r["partition"], r["doc_id"], r["detail"])
-        for r in fused.violations.collect()
-    }
-    b = {
-        (r["partition"], r["doc_id"], r["detail"])
-        for r in result.violations.filter("rule_id = 'span_sequence_valid'").collect()
-    }
-    assert a == b and len(a) > 0
+def _span_sequence_parity(spark, docs):
+    """(partition, doc_id, detail) multisets: the native fused-pass rule vs
+    the Arrow UDF that sorts spans by offset (the byte-for-byte oracle)."""
+    from collections import Counter
 
-
-def test_span_prescreen_equivalent_to_udf(docs):
-    """The JVM prescreen predicate must flag exactly the rows the Arrow UDF
-    flags — this is what makes the prescreened production path sound."""
-    from anomaly_detection_spark.functions.spans import offsets_invalid_reason
-
-    mismatch = (
-        docs.select(
-            builtin.span_sequence_prescreen().alias("pre"),
-            offsets_invalid_reason(
-                F.transform("spans", lambda s: s["offset"])
-            ).isNotNull().alias("udf"),
-        )
-        .filter(F.col("pre") != F.col("udf"))
-        .count()
+    from anomaly_detection_spark.functions.spans import (
+        span_sequence_invalid_reason,
     )
-    assert mismatch == 0
+
+    run = ValidationRun(
+        spark, docs, RuleSet(row_rules=[builtin.span_sequence_valid_row()]))
+    native = Counter(
+        (r["partition"], r["doc_id"], r["detail"])
+        for r in run.fused_row_violations(docs).collect()
+    )
+    oracle = Counter(
+        (r["partition"], r["doc_id"], r["detail"])
+        for r in docs.select(
+            "partition", "doc_id",
+            span_sequence_invalid_reason("spans").alias("detail"),
+        ).filter(F.col("detail").isNotNull()).collect()
+    )
+    return native, oracle
 
 
-def test_span_sequence_prescreened_rule_equivalent(spark, docs, catalog):
-    """prescreen=True and prescreen=False emit identical violation rows
-    (partition, doc_id, detail)."""
-    ctx = RuleContext(media_catalog=catalog)
-    fast = builtin.span_sequence_valid(prescreen=True).build(docs, ctx)
-    full = builtin.span_sequence_valid(prescreen=False).build(docs, ctx)
-    a = {(r["partition"], r["doc_id"], r["detail"]) for r in fast.collect()}
-    b = {(r["partition"], r["doc_id"], r["detail"]) for r in full.collect()}
-    assert a == b and len(a) > 0
+def test_span_sequence_row_rule_matches_arrow_udf(spark, docs):
+    native, oracle = _span_sequence_parity(spark, docs)
+    assert native == oracle and len(oracle) > 0
 
 
-def test_unique_range_strategy_equivalent(spark, docs, catalog):
-    from anomaly_detection_spark.rules.core import RuleContext
+def test_span_sequence_row_rule_matches_arrow_udf_on_edge_rows(spark):
+    """Every offset list of length <= 3 over NULL, the int32 extremes and
+    small negatives/duplicates, plus NULL and empty spans: each detail
+    string (which check fires first, list order, repeats) must equal the
+    Arrow UDF's."""
+    import itertools
 
-    ctx = RuleContext(media_catalog=catalog, range_partitions=8)
-    hashagg = builtin.unique("doc_id", strategy="hashagg").build(docs, ctx)
-    ranged = builtin.unique("doc_id", strategy="range").build(docs, ctx)
-    a = {(r["partition"], r["doc_id"]) for r in hashagg.collect()}
-    b = {(r["partition"], r["doc_id"]) for r in ranged.collect()}
-    assert a == b and len(a) > 0
+    vals = [None, -(2**31), -3, -1, 0, 1, 2, 5, 2**31 - 1]
+    lists = [list(t) for n in range(4) for t in itertools.product(vals, repeat=n)]
+    lists += [[-3, -3, -1, -3], [5, 1, 5, 1, 5], [2**31 - 1] * 3, None]
+    rows = [
+        (f"p{i % 3}", f"e{i}",
+         None if offs is None else
+         [("text", "t", None, o) for o in offs])
+        for i, offs in enumerate(lists)
+    ]
+    docs = spark.createDataFrame(
+        rows,
+        "partition string, doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    native, oracle = _span_sequence_parity(spark, docs)
+    details = {d for _, _, d in oracle}
+    assert {"spans is NULL", "NULL offset",
+            "negative offsets: [-3, -3, -3, -1]",
+            "duplicate offsets: [1, 5]"} <= details
+    assert native == oracle
 
 
 def test_media_caption_adjacent_rule(spark):

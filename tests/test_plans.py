@@ -46,19 +46,36 @@ def test_uniqueness_has_partial_aggregation(docs_on_disk):
     assert "partial_count" in plan or "Partial" in plan
 
 
-def test_prescreen_scan_prunes_nested_schema(docs_on_disk):
-    """The span-sequence prescreen reads ONLY spans.offset (plus ids) from
+def test_span_sequence_row_scan_prunes_nested_schema(spark, docs_on_disk):
+    """The fused span-sequence pass reads ONLY spans.offset (plus ids) from
     parquet — nested-schema pruning must hold or the 100 TB scan reads the
     full text/media payloads for nothing."""
-    pruned = docs_on_disk.filter(builtin.span_sequence_prescreen()).select(
-        "partition", "doc_id"
-    )
-    plan = plan_of(pruned)
-    assert "offset" in plan
-    # text/media_ref must NOT be in the parquet ReadSchema
+    from anomaly_detection_spark.engine import ValidationRun
+    from anomaly_detection_spark.rules.core import RuleSet
+
+    rules = RuleSet(row_rules=[builtin.span_sequence_valid_row()])
+    run = ValidationRun(spark, docs_on_disk, rules)
+    plan = plan_of(run.fused_row_violations(docs_on_disk))
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and "text" not in read_schema[0]
+    assert read_schema and "offset" in read_schema[0]
+    # text/media_ref must NOT be in the parquet ReadSchema
+    assert "text" not in read_schema[0]
     assert "media_ref" not in read_schema[0]
+
+
+def test_main_suite_fused_pass_runs_no_python(spark, docs_on_disk):
+    """The fused row pass of the suite ``run_validation.main`` runs stays
+    all-JVM: no Arrow or batched Python UDF node in its plan."""
+    from anomaly_detection_spark.engine import ValidationRun
+    from anomaly_detection_spark.rules.core import RuleSet
+
+    rules = RuleSet(row_rules=builtin.default_document_rules()
+                    + [builtin.no_pii(), builtin.span_sequence_valid_row()])
+    run = ValidationRun(spark, docs_on_disk, rules)
+    plan = plan_of(run.fused_row_violations(docs_on_disk))
+    assert "Scan parquet" in plan
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_referential_scan_prunes_to_media_ref(docs_on_disk, catalog):

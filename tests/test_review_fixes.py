@@ -113,6 +113,24 @@ def test_append_missing_pairs_creates_sink(spark, tmp_path):
     assert spark.read.parquet(path).count() == 1
 
 
+def test_append_missing_pairs_propagates_unreadable_sink(spark, tmp_path):
+    """Only an absent sink may skip the dedup. A sink directory that holds
+    parquet without the key columns is not "absent": treating it as such
+    would append every row again on each retry."""
+    from pyspark.errors import AnalysisException
+
+    from run_validation import append_missing_pairs
+
+    path = str(tmp_path / "foreign")
+    spark.createDataFrame([(1,)], ["x"]).write.parquet(path)
+    df = spark.createDataFrame([("p0", "rA", 1)],
+                               ["partition", "rule_id", "v"])
+    with pytest.raises(AnalysisException) as exc:
+        append_missing_pairs(spark, df, path)
+    assert exc.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert spark.read.parquet(path).count() == 1
+
+
 # ----------------------------------------------------- round-4 ADVICE fixes
 
 def test_violation_slices_sub_ppm_overall_rate(spark):

@@ -1,7 +1,7 @@
 """Property-based tests (hypothesis) for the span-validation UDF cores —
 driven through the pandas functions directly (no Spark session), including
 the Arrow float64+NaN batch-widening representation that the int-typed
-offset arrays arrive in whenever ANY row of a batch carries a NULL element
+offsets arrive in whenever ANY row of a batch carries a NULL element
 (the round-2 ADVICE crash class)."""
 
 import math
@@ -11,12 +11,8 @@ import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from anomaly_detection_spark.functions.spans import (
-    offsets_invalid_reason,
-    span_sequence_invalid_reason,
-)
+from anomaly_detection_spark.functions.spans import span_sequence_invalid_reason
 
-offsets_fn = offsets_invalid_reason.func
 spans_fn = span_sequence_invalid_reason.func
 
 opt_int = st.one_of(st.none(), st.integers(min_value=-5, max_value=5))
@@ -39,41 +35,27 @@ def reference(offs):
     return None
 
 
-def as_object_batch(rows):
-    return pd.Series([None if r is None else list(r) for r in rows],
-                     dtype="object")
-
-
-def as_float64_batch(rows):
-    """Arrow's widened form: int children become float64 arrays with NaN."""
+def as_struct_batch(rows, offset=lambda o: o):
+    """One span struct per offset; ``offset`` maps each offset value to its
+    Arrow-side representation."""
     return pd.Series(
         [None if r is None
-         else np.array([math.nan if o is None else float(o) for o in r],
-                       dtype="float64")
+         else [{"kind": "text", "text": "x", "media_ref": None,
+                "offset": offset(o)} for o in r]
          for r in rows],
         dtype="object",
     )
+
+
+def widened(o):
+    """Arrow's widened form: int children become float64 with NaN."""
+    return np.float64(math.nan if o is None else o)
 
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(offsets_list, min_size=1, max_size=8))
 def test_offsets_reason_matches_reference_in_both_representations(rows):
     want = [reference(r) for r in rows]
-    got_obj = list(offsets_fn(as_object_batch(rows)))
-    got_f64 = list(offsets_fn(as_float64_batch(rows)))
-    assert got_obj == want
+    assert list(spans_fn(as_struct_batch(rows))) == want
     # the widened batch must produce IDENTICAL verdicts AND reason strings
-    assert got_f64 == want
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(offsets_list, min_size=1, max_size=6))
-def test_struct_and_offsets_udfs_agree(rows):
-    struct_rows = pd.Series(
-        [None if r is None
-         else [{"kind": "text", "text": "x", "media_ref": None, "offset": o}
-               for o in r]
-         for r in rows],
-        dtype="object",
-    )
-    assert list(spans_fn(struct_rows)) == list(offsets_fn(as_object_batch(rows)))
+    assert list(spans_fn(as_struct_batch(rows, widened))) == want

@@ -1,14 +1,13 @@
 """Arrow-UDF span functions: signature equality semantics + parity with
-native expressions (input_hint per-row invariant)."""
+native expressions (input_hint per-row invariant). The span-sequence
+reason UDF's parity with the native rule lives in test_engine_rules.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.functions.spans import (
-    offsets_invalid_reason,
     span_count,
-    span_sequence_invalid_reason,
     span_signature,
 )
 
@@ -53,22 +52,6 @@ def test_signature_order_invariance(spark):
     )
     sigs = {r["doc_id"]: r["sig"] for r in df.select("doc_id", span_signature("spans").alias("sig")).collect()}
     assert sigs["a"] == sigs["b"] == "image||m1;text|x|;text|hello|"
-
-
-def test_offsets_only_udf_parity_with_full_struct_udf(docs):
-    """The offsets-only fast path (what the engine rule uses) must produce
-    the exact verdicts + reason strings of the full-struct UDF."""
-    mismatch = (
-        docs.select(
-            span_sequence_invalid_reason("spans").alias("a"),
-            offsets_invalid_reason(
-                F.transform("spans", lambda s: s["offset"])
-            ).alias("b"),
-        )
-        .filter(~(F.col("a").eqNullSafe(F.col("b"))))
-        .count()
-    )
-    assert mismatch == 0
 
 
 def test_span_count_parity_with_size(docs):
