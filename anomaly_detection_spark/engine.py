@@ -28,7 +28,7 @@ import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from anomaly_detection_spark.rules.core import (
@@ -262,6 +262,8 @@ class ValidationResult:
     verdicts: DataFrame
     violations: DataFrame
     metrics: DataFrame
+    #: the rows of ``verdicts``, collected by the action that built it
+    grid: list[Row]
     #: True when a resume found every planned (partition, rule_id) pair
     #: already committed — the frames are empty and sinks must NOT be
     #: overwritten with them.
@@ -352,11 +354,11 @@ class ValidationRun:
 
         One action builds the grid: a single job graph counts violations
         per pair and rows per partition, and the result is persisted in one
-        partition (metadata-sized, so each grid sink is one file).
-        ``verdicts`` is that cached frame and ``metrics`` a projection of
-        it, so every consumer reads the grid instead of re-running the
-        rules. The caller releases the caches with ``verdicts.unpersist()``
-        and ``violations.unpersist()``.
+        partition (metadata-sized, so each grid sink is one file) and
+        collected to the driver as ``grid``. ``verdicts`` is that cached
+        frame and ``metrics`` a projection of it, so every consumer reads
+        the grid instead of re-running the rules. The caller releases the
+        caches with ``verdicts.unpersist()`` and ``violations.unpersist()``.
 
         ``metrics.duration_ms`` is the wall time of that grid action —
         executing every rule, the counts and, with ``persist=True``,
@@ -390,7 +392,7 @@ class ValidationRun:
             if not pending_parts:
                 return ValidationResult(
                     self._empty_verdicts(), self._empty_violations(),
-                    self._empty_metrics(), nothing_pending=True,
+                    self._empty_metrics(), [], nothing_pending=True,
                 )
             # Partition pruning for resume: only rescan partitions with work.
             docs = docs.filter(F.col(p).isin(pending_parts))
@@ -442,7 +444,7 @@ class ValidationRun:
             .persist()
         )
         started = time.perf_counter()
-        verdicts.count()
+        grid_rows = verdicts.collect()
         duration_ms = int((time.perf_counter() - started) * 1000)
         committed_at = datetime.now(timezone.utc)
 
@@ -458,7 +460,7 @@ class ValidationRun:
         )
         if self.manifest is not None and commit_manifest:
             self.manifest.commit(metrics)
-        return ValidationResult(verdicts, violations, metrics)
+        return ValidationResult(verdicts, violations, metrics, grid_rows)
 
     # ------------------------------------------------------------------
     def _with_rules(self, frame: DataFrame) -> DataFrame:

@@ -20,12 +20,20 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard config.
+    """Build a SparkSession with the engine's standard config, or return the
+    active one unchanged.
+
+    The config applies only when this call creates the session: a session
+    the caller already built (a test suite, a notebook, a benchmark harness)
+    keeps its own conf, and every argument is ignored.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; under
     spark-submit the cluster manager's master wins (we never override an
     externally provided master).
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if master is not None:

@@ -175,8 +175,23 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return args
 
 
+def cluster_violations(violations):
+    """Lay out a violations frame for its parquet sink: rows clustered by
+    (partition, rule_id) and sorted by (partition, rule_id, doc_id, detail),
+    NULLs first, within each file.
+
+    The rebalance lets AQE size the files by bytes rather than by the
+    partitions of the rule branches upstream: it coalesces a small increment
+    into one file and splits a hot pair across several. Sorting makes the
+    pair columns compress to almost nothing and the file contents a
+    function of the rows, not of which task wrote them first."""
+    return violations.hint("rebalance", "partition", "rule_id") \
+        .sortWithinPartitions("partition", "rule_id", "doc_id", "detail")
+
+
 def append_missing_pairs(spark, df, path: str,
-                         keys: tuple[str, ...] = ("partition", "rule_id")) -> None:
+                         keys: tuple[str, ...] = ("partition", "rule_id"),
+                         layout=lambda d: d) -> None:
     """Append ``df`` to the parquet sink at ``path``, skipping rows whose
     (partition, rule_id) the sink ALREADY holds — the idempotent half of the
     data-first/manifest-last resume contract. A crash between sink writes
@@ -185,7 +200,11 @@ def append_missing_pairs(spark, df, path: str,
     sinks, not others, depending on where the crash landed). Exactly-once
     per pair holds as long as each parquet job commit is atomic; a torn job
     commit (partial pair) needs a transactional (Iceberg/Delta) sink, where
-    the whole run is one atomic commit instead."""
+    the whole run is one atomic commit instead.
+
+    ``layout`` is applied to the rows left after that filter, so the
+    appended files are laid out as an overwrite would lay them out (see
+    ``cluster_violations``); a join placed after it would reshuffle them."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -199,7 +218,7 @@ def append_missing_pairs(spark, df, path: str,
             raise
     else:
         df = df.join(existing.select(*keys).distinct(), list(keys), "left_anti")
-    df.write.mode("append").parquet(path)
+    layout(df).write.mode("append").parquet(path)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -451,6 +470,9 @@ def main(argv: list[str] | None = None) -> int:
     # pairs pending, and the retry must not append their rows a second time
     # — each sink drops pairs it already holds (see append_missing_pairs).
     # With Iceberg/Delta sinks all of this becomes one atomic commit.
+    # The violations sink is laid out where it meets the writer, after the
+    # cap and after the resume filter: its file count follows bytes, not the
+    # partitions of the rule branches that produced it (cluster_violations).
     # When a resume finds nothing pending, the sinks and the manifest are
     # left untouched (the empty frames would clobber the previous run's
     # real results), but every requested derived output is still refreshed:
@@ -477,10 +499,15 @@ def main(argv: list[str] | None = None) -> int:
         append = args.resume and manifest is not None and (
             manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0)
         for name, df in sinks.items():
+            # the grid sinks are one cached partition already
+            layout = cluster_violations if name == "violations" \
+                else (lambda d: d)
             if append:
-                append_missing_pairs(spark, df, f"{args.output}/{name}")
+                append_missing_pairs(spark, df, f"{args.output}/{name}",
+                                     layout=layout)
             else:
-                df.write.mode("overwrite").parquet(f"{args.output}/{name}")
+                layout(df).write.mode("overwrite").parquet(
+                    f"{args.output}/{name}")
     if prev_verdicts is not None:
         write_verdict_diff(prev_verdicts)
     if args.export_csv:
@@ -505,9 +532,7 @@ def main(argv: list[str] | None = None) -> int:
     if manifest is not None and not result.nothing_pending:
         manifest.commit(result.metrics)
 
-    # the grid is metadata-sized and cached: collect it once, roll up here
-    grid = result.verdicts.collect()
-    n_fail = sum(not r["pass"] for r in grid)
+    n_fail = sum(not r["pass"] for r in result.grid)
     if args.report_json:
         # S4: small driver-side JSON summary — per-rule and per-partition
         # roll-ups of this run's verdict grid, never per-row data
@@ -517,7 +542,8 @@ def main(argv: list[str] | None = None) -> int:
         def rollup(key):
             """(value, rows) groups of the grid by ``key``, ascending with
             NULL first, as Spark's orderBy sorts them."""
-            rows = sorted(grid, key=lambda r: (r[key] is not None, r[key]))
+            rows = sorted(result.grid,
+                          key=lambda r: (r[key] is not None, r[key]))
             return ((k, list(g)) for k, g in groupby(rows, lambda r: r[key]))
 
         per_rule = [

@@ -131,6 +131,26 @@ def test_append_missing_pairs_propagates_unreadable_sink(spark, tmp_path):
     assert spark.read.parquet(path).count() == 1
 
 
+def test_get_spark_keeps_the_conf_of_an_existing_session(spark):
+    """get_spark on a session the caller already built (the call main
+    makes) hands it back as configured; the engine's defaults apply only to
+    a session the call creates."""
+    from anomaly_detection_spark.session import get_spark
+
+    want = {"spark.sql.shuffle.partitions": "3",
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    before = {k: spark.conf.get(k) for k in want}
+    try:
+        for k, v in want.items():
+            spark.conf.set(k, v)
+        got = get_spark(app_name="validate:s1")
+        assert {k: got.conf.get(k) for k in want} == want
+        assert {k: spark.conf.get(k) for k in want} == want
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
 # ----------------------------------------------------- round-4 ADVICE fixes
 
 def test_violation_slices_sub_ppm_overall_rate(spark):
