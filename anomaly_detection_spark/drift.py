@@ -168,39 +168,3 @@ def quantile_shift(
         drifted = drifted | fl
     return out.select(*cols, drifted.alias("drifted"))
 
-
-def drift_violations(
-    cur_docs: DataFrame,
-    base_docs: DataFrame,
-    psi_threshold: float = 0.25,
-    ks_threshold: float = 0.2,
-    partition_col: str = "partition",
-) -> DataFrame:
-    """Emit drift verdicts in the engine's violation schema: one violation per
-    drifted partition (doc_id NULL — drift is a partition-level property).
-
-    Two drift rules:
-    * ``drift_psi:span_kind``  — PSI of the span-kind distribution
-    * ``drift_ks:spans_per_doc`` — KS over the spans-per-document distribution
-    """
-    kinds_cur = span_kind_histogram(cur_docs, partition_col)
-    kinds_base = span_kind_histogram(base_docs, partition_col)
-    psi_df = psi(kinds_cur, kinds_base)
-
-    n_cur = numeric_histogram(cur_docs, F.size("spans"), partition_col)
-    n_base = numeric_histogram(base_docs, F.size("spans"), partition_col)
-    ks_df = ks_statistic(n_cur, n_base)
-
-    psi_v = psi_df.filter(F.col("psi") > psi_threshold).select(
-        "partition",
-        F.lit("drift_psi:span_kind").alias("rule_id"),
-        F.lit(None).cast("string").alias("doc_id"),
-        F.concat(F.lit("PSI="), F.round("psi", 4).cast("string")).alias("detail"),
-    )
-    ks_v = ks_df.filter(F.col("ks") > ks_threshold).select(
-        "partition",
-        F.lit("drift_ks:spans_per_doc").alias("rule_id"),
-        F.lit(None).cast("string").alias("doc_id"),
-        F.concat(F.lit("KS="), F.round("ks", 4).cast("string")).alias("detail"),
-    )
-    return psi_v.unionByName(ks_v)

@@ -203,6 +203,32 @@ def violation_slices(docs: DataFrame, violations: DataFrame,
     )
 
 
+def _project_binds(docs: DataFrame, row_rules: list[RowRule]) -> DataFrame:
+    """``docs`` plus one column per distinct ``bind`` of ``row_rules``, in
+    one projection. Rules that bind a name to expressions that print the
+    same share the column."""
+    binds: dict = {}
+    for r in row_rules:
+        for name, col in r.bind.items():
+            # a later rule silently clobbering an earlier rule's bind of
+            # the same name (or shadowing a real input column) would
+            # yield wrong verdicts with no error — fail loudly instead
+            if name in binds and str(binds[name]) != str(col):
+                raise ValueError(
+                    f"conflicting bind {name!r}: two rules bind different "
+                    f"expressions to the same name"
+                )
+            binds[name] = col
+    clash = set(binds) & set(docs.columns)
+    if clash:
+        raise ValueError(
+            f"bind names collide with input columns: {sorted(clash)}"
+        )
+    if not binds:
+        return docs
+    return docs.select("*", *[c.alias(name) for name, c in binds.items()])
+
+
 def sampled_violation_rates(docs: DataFrame, row_rules: list[RowRule],
                             ctx: RuleContext | None = None,
                             sample_pct: int = 5) -> DataFrame:
@@ -238,12 +264,7 @@ def sampled_violation_rates(docs: DataFrame, row_rules: list[RowRule],
         aggs.append(
             F.sum(F.when(r.violation, F.lit(1)).otherwise(F.lit(0))).alias(
                 f"_v_{r.rule_id}"))
-    base = sampled
-    for r in row_rules:
-        for name, expr in r.bind.items():
-            if name not in base.columns:
-                base = base.withColumn(name, expr)
-    per_part = base.groupBy(
+    per_part = _project_binds(sampled, row_rules).groupBy(
         F.col(ctx.partition_col).alias("partition")).agg(*aggs)
     stack_args = ", ".join(
         f"'{r.rule_id}', `_v_{r.rule_id}`" for r in row_rules)
@@ -301,25 +322,7 @@ class ValidationRun:
         p, d = self.ctx.partition_col, self.ctx.doc_id_col
         if not self.rules.row_rules:
             return self._empty_violations()
-        binds: dict = {}
-        for r in self.rules.row_rules:
-            for name, col in r.bind.items():
-                # a later rule silently clobbering an earlier rule's bind of
-                # the same name (or shadowing a real input column) would
-                # yield wrong verdicts with no error — fail loudly instead
-                if name in binds and str(binds[name]) != str(col):
-                    raise ValueError(
-                        f"conflicting bind {name!r}: two rules bind different "
-                        f"expressions to the same name"
-                    )
-                binds[name] = col
-        clash = set(binds) & set(docs.columns)
-        if clash:
-            raise ValueError(
-                f"bind names collide with input columns: {sorted(clash)}"
-            )
-        if binds:
-            docs = docs.select("*", *[c.alias(name) for name, c in binds.items()])
+        docs = _project_binds(docs, self.rules.row_rules)
         hits = F.array(*[
             F.when(
                 r.violation,

@@ -315,9 +315,11 @@ def ewma_control(daily: DataFrame, group_col: str = "event_type",
     comparison ``(x·den − num)² > 9·num·den`` — squared instead of a
     square root, with BOTH sides widened to 128-bit before the multiply
     (``decimal(38,0)`` here, HUGEINT in the DuckDB oracle) so the
-    square of a full-scale residual cannot wrap an int64. The binding
-    bound is now only that ``x·den`` and ``num`` fit a long:
-    counts up to ~1.5·10¹⁴/day (den = Σw = 58 975).
+    square of a full-scale residual cannot wrap an int64. The prediction's
+    ``num · 10⁶`` is widened the same way before the multiply (it wraps
+    an int64 once counts pass ~1.56·10⁸/day). The binding bound is now
+    only that ``x·den`` and ``num`` fit a long: counts up to
+    ~1.5·10¹⁴/day (den = Σw = 58 975).
 
     Shape at 100 TB: the raw stream folds to (group, day) counts by a
     map-side-combined aggregate BEFORE this function; here the only
@@ -355,7 +357,8 @@ def ewma_control(daily: DataFrame, group_col: str = "event_type",
     return mid.select(
         group_col, day_col, "cnt",
         F.when(F.col("_den") > 0,
-               F.expr("(_num * 1000000) div _den")).cast("long")
+               F.expr("(CAST(_num AS DECIMAL(38,0)) * 1000000) div _den"))
+        .cast("long")
         .alias("pred_micro"),
         F.when(
             (F.col("_den") > 0) & (resid * resid > band),

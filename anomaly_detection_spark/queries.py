@@ -878,7 +878,8 @@ WITH daily AS (
   WINDOW w AS (PARTITION BY event_type ORDER BY day)
 )
 SELECT event_type, day, cnt,
-  CASE WHEN den > 0 THEN (num * 1000000) // den END AS pred_micro,
+  CAST(CASE WHEN den > 0 THEN (CAST(num AS HUGEINT) * 1000000) // den END
+       AS BIGINT) AS pred_micro,
   CAST(CASE WHEN den > 0
             AND CAST(cnt * den - num AS HUGEINT) * (cnt * den - num)
                 > 9 * CAST(num AS HUGEINT) * den

@@ -15,6 +15,9 @@ Dataset rules carry their own distributed topology:
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -165,26 +168,82 @@ def no_pii(spans_col: str = "spans", kinds: list[str] | None = None,
     )
 
 
+DEFAULT_KINDS = ["text", "image", "audio", "table"]
+
+
+def _span_stats_expr(spans_col: str, kinds: list[str]) -> Column:
+    """ONE traversal of the spans array computing every per-span violation
+    counter the span rules need. Higher-order-function lambdas are
+    interpreted per element, so five separate exists/filter traversals cost
+    ~5× this single aggregate — the dominant JVM cost of the fused pass at
+    10^8+ rows."""
+    zero = F.struct(
+        F.lit(0).alias("text_missing"),
+        F.lit(0).alias("media_missing"),
+        F.lit(0).alias("bad_kind"),
+        F.lit(0).alias("neg_off"),
+        F.lit(0).alias("null_off"),
+    )
+
+    def step(acc, s):
+        b = lambda c: F.when(c, 1).otherwise(0)  # noqa: E731
+        return F.struct(
+            (acc["text_missing"] + b((s["kind"] == "text") & s["text"].isNull())).alias("text_missing"),
+            (acc["media_missing"] + b((s["kind"] != "text") & s["media_ref"].isNull())).alias("media_missing"),
+            (acc["bad_kind"] + b(s["kind"].isNull() | ~s["kind"].isin(kinds))).alias("bad_kind"),
+            (acc["neg_off"] + b(s["offset"] < 0)).alias("neg_off"),
+            (acc["null_off"] + b(s["offset"].isNull())).alias("null_off"),
+        )
+
+    return F.aggregate(F.col(spans_col), zero, step)
+
+
+@functools.lru_cache(maxsize=None)
+def _span_stats_bind(spans_col: str, kinds: tuple[str, ...]) -> tuple[str, Column]:
+    """The span-stats bind for one ``(spans_col, kinds)``: its name and
+    expression. Memoised, so every span rule over the same key binds the
+    SAME Column object — ``aggregate`` lambdas get fresh variable names on
+    each build, and the engine only shares binds whose expressions print
+    identically. The name carries the key: rules over different ``kinds``
+    get one traversal each instead of a bind conflict."""
+    key = hashlib.sha1(repr((spans_col, kinds)).encode()).hexdigest()[:8]
+    return f"_span_stats_{key}", _span_stats_expr(spans_col, list(kinds))
+
+
+def _span_stats(spans_col: str, kinds: list[str] = DEFAULT_KINDS
+                ) -> tuple[Column, dict[str, Column]]:
+    """(the stats struct column, its bind) for a span rule."""
+    name, expr = _span_stats_bind(spans_col, tuple(kinds))
+    return F.col(name), {name: expr}
+
+
 def span_kinds_accepted(kinds: list[str], spans_col: str = "spans") -> RowRule:
+    """Every span's kind is one of ``kinds`` (a NULL kind or a NULL span
+    element violates). The detail walks the array again, but only for
+    violating rows (CaseWhen branches are lazy in codegen)."""
+    st, bind = _span_stats(spans_col, kinds)
     bad = F.filter(F.col(spans_col), lambda s: ~s["kind"].isin(kinds) | s["kind"].isNull())
     return RowRule(
         rule_id="span_kinds_accepted",
-        violation=F.size(bad) > 0,
+        violation=st["bad_kind"] > 0,
         detail=F.concat(
             F.lit("bad kinds: "),
             F.concat_ws(",", F.transform(bad, lambda s: F.coalesce(s["kind"], F.lit("NULL")))),
         ),
+        bind=bind,
     )
 
 
 def text_present_on_text_spans(spans_col: str = "spans") -> RowRule:
     """Every span with kind='text' must carry non-null text (FIXTURES.md plant
     NULL_TEXT)."""
-    bad = F.filter(F.col(spans_col), lambda s: (s["kind"] == "text") & s["text"].isNull())
+    st, bind = _span_stats(spans_col)
     return RowRule(
         rule_id="text_present_on_text_spans",
-        violation=F.size(bad) > 0,
-        detail=F.concat(F.lit("text-kind spans with NULL text: "), F.size(bad).cast("string")),
+        violation=st["text_missing"] > 0,
+        detail=F.concat(F.lit("text-kind spans with NULL text: "),
+                        st["text_missing"].cast("string")),
+        bind=bind,
     )
 
 
@@ -219,38 +278,33 @@ def text_encoding_clean(spans_col: str = "spans",
 
 
 def media_ref_present_on_media_spans(spans_col: str = "spans") -> RowRule:
-    bad = F.filter(
-        F.col(spans_col), lambda s: (s["kind"] != "text") & s["media_ref"].isNull()
-    )
+    st, bind = _span_stats(spans_col)
     return RowRule(
         rule_id="media_ref_present_on_media_spans",
-        violation=F.size(bad) > 0,
-        detail=F.concat(F.lit("media spans missing media_ref: "), F.size(bad).cast("string")),
+        violation=st["media_missing"] > 0,
+        detail=F.concat(F.lit("media spans missing media_ref: "),
+                        st["media_missing"].cast("string")),
+        bind=bind,
     )
 
 
 def offsets_valid_native(spans_col: str = "spans") -> RowRule:
-    """Offsets non-null, non-negative and strictly increasing once sorted
-    (i.e. unique) — the invariant ``span_sequence_valid_row`` enforces.
-
-    Sorts offsets with ``array_sort`` and compares neighbours with
-    ``zip_with`` — no Python.
-    """
-    offs = F.array_sort(F.transform(F.col(spans_col), lambda s: s["offset"]))
-    has_null = F.exists(offs, lambda o: o.isNull())
-    neg = F.size(F.filter(offs, lambda o: o < 0)) > 0
-    pairs_bad = F.size(
-        F.filter(
-            F.zip_with(offs, F.slice(offs, 2, F.greatest(F.size(offs) - 1, F.lit(1))),
-                       lambda a, b: b <= a),
-            lambda x: x,
-        )
-    ) > 0
-    has_pairs = F.size(offs) > 1
+    """Offsets non-null, non-negative and pairwise distinct — the invariant
+    ``span_sequence_valid_row`` enforces, with the offsets sorted in the
+    detail. NULL and negative offsets come from the shared span-stats
+    counters; duplicates compare the ``_span_offs`` bind with its distinct
+    set. No Python."""
+    st, bind = _span_stats(spans_col)
+    offs = F.col("_span_offs")
+    dup = F.size(F.array_distinct(offs)) < F.size(offs)
     return RowRule(
         rule_id="offsets_valid_native",
-        violation=has_null | neg | (has_pairs & pairs_bad),
-        detail=F.concat(F.lit("offsets="), F.concat_ws(",", F.transform(offs, lambda o: o.cast("string")))),
+        violation=(st["null_off"] > 0) | (st["neg_off"] > 0) | dup,
+        detail=F.concat(
+            F.lit("offsets="),
+            F.concat_ws(",", F.transform(F.array_sort(offs), lambda o: o.cast("string"))),
+        ),
+        bind={**bind, "_span_offs": F.col(f"{spans_col}.offset")},
     )
 
 
@@ -801,21 +855,16 @@ def referential_scalable(catalog_col: str = "media_ref",
 def psi_drift(base_docs: DataFrame, threshold: float = 0.25,
               rule_id: str = "drift_psi:span_kind") -> DatasetRule:
     """Span-kind distribution drift vs a baseline snapshot as a suite rule:
-    PSI over per-partition histograms (closed-form DataFrame math, two tiny
-    shuffle aggs regardless of snapshot size). Violations are partition-level
+    ``psi_drift_from_hist`` against the baseline's span-kind histogram,
+    computed from ``base_docs`` at build time (the fold over stored
+    histograms is exact on a single one). Violations are partition-level
     (doc_id NULL)."""
 
     def build(docs: DataFrame, ctx: RuleContext) -> DataFrame:
         from anomaly_detection_spark import drift as _drift
 
-        cur = _drift.span_kind_histogram(docs, ctx.partition_col)
         base = _drift.span_kind_histogram(base_docs, ctx.partition_col)
-        return _drift.psi(cur, base).filter(F.col("psi") > threshold).select(
-            "partition",
-            F.lit(rule_id).alias("rule_id"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.concat(F.lit("PSI="), F.round("psi", 4).cast("string")).alias("detail"),
-        )
+        return psi_drift_from_hist(base, threshold, rule_id).build(docs, ctx)
 
     return DatasetRule(rule_id=rule_id, build=build)
 
@@ -829,7 +878,8 @@ def psi_drift_from_hist(base_hist: DataFrame, threshold: float = 0.25,
     metadata and re-reading 100 TB: only the CURRENT snapshot is scanned,
     and because histograms merge exactly (``drift.merge_histograms``) the
     stored baseline can itself be the running merge of every committed
-    snapshot. Same verdict semantics as ``psi_drift``."""
+    snapshot. ``psi_drift`` is this rule over a histogram of baseline
+    data."""
 
     def build(docs: DataFrame, ctx: RuleContext) -> DataFrame:
         from anomaly_detection_spark import drift as _drift
@@ -993,91 +1043,18 @@ def row_count_drift(base_docs: DataFrame, max_rel_delta: float = 0.5,
     return DatasetRule(rule_id=rule_id, build=build)
 
 
-DEFAULT_KINDS = ["text", "image", "audio", "table"]
-
-
-def _span_stats_expr(spans_col: str, kinds: list[str]) -> Column:
-    """ONE traversal of the spans array computing every per-span violation
-    counter the default rules need. Higher-order-function lambdas are
-    interpreted per element, so five separate exists/filter traversals cost
-    ~5× this single aggregate — the dominant JVM cost of the fused pass at
-    10^8+ rows."""
-    zero = F.struct(
-        F.lit(0).alias("text_missing"),
-        F.lit(0).alias("media_missing"),
-        F.lit(0).alias("bad_kind"),
-        F.lit(0).alias("neg_off"),
-        F.lit(0).alias("null_off"),
-    )
-
-    def step(acc, s):
-        b = lambda c: F.when(c, 1).otherwise(0)  # noqa: E731
-        return F.struct(
-            (acc["text_missing"] + b((s["kind"] == "text") & s["text"].isNull())).alias("text_missing"),
-            (acc["media_missing"] + b((s["kind"] != "text") & s["media_ref"].isNull())).alias("media_missing"),
-            (acc["bad_kind"] + b(s["kind"].isNull() | ~s["kind"].isin(kinds))).alias("bad_kind"),
-            (acc["neg_off"] + b(s["offset"] < 0)).alias("neg_off"),
-            (acc["null_off"] + b(s["offset"].isNull())).alias("null_off"),
-        )
-
-    return F.aggregate(F.col(spans_col), zero, step)
-
-
-def default_document_rules(spans_col: str = "spans",
-                           kinds: list[str] | None = None) -> list:
+def default_document_rules() -> list:
     """The engine's standard document rule suite (≈ the reference's fixed
     seven-pass detector fan-out, multidimensional_detector.py:134-155,
-    recast as declarative constraints).
-
-    All span-level predicates read a SHARED bound stats column computed in
-    one array traversal (see ``_span_stats_expr``); detail expressions keep
-    their per-rule array walks but are lazily evaluated for violating rows
-    only (Catalyst's CaseWhen branches are lazy in codegen)."""
-    kinds = kinds or DEFAULT_KINDS
-    st = "_span_stats"
-    offs_bound = "_span_offs"
-    bind = {
-        st: _span_stats_expr(spans_col, kinds),
-        offs_bound: F.col(f"{spans_col}.offset"),
-    }
-    bad_kinds = F.filter(
-        F.col(spans_col), lambda s: ~s["kind"].isin(kinds) | s["kind"].isNull()
-    )
-    sorted_offs = F.array_sort(F.col(offs_bound))
-    dup = F.size(F.array_distinct(F.col(offs_bound))) < F.size(F.col(offs_bound))
+    recast as declarative constraints): the public span-rule builders over
+    ``spans`` with ``DEFAULT_KINDS``. They bind one shared span-stats
+    column, so the fused pass walks the spans array once for all four
+    (see ``_span_stats_bind``)."""
     return [
         not_null("doc_id"),
-        non_empty_array(spans_col, rule_id=f"non_empty:{spans_col}"),
-        RowRule(
-            rule_id="text_present_on_text_spans",
-            violation=F.col(st)["text_missing"] > 0,
-            detail=F.concat(F.lit("text-kind spans with NULL text: "),
-                            F.col(st)["text_missing"].cast("string")),
-            bind=bind,
-        ),
-        RowRule(
-            rule_id="media_ref_present_on_media_spans",
-            violation=F.col(st)["media_missing"] > 0,
-            detail=F.concat(F.lit("media spans missing media_ref: "),
-                            F.col(st)["media_missing"].cast("string")),
-            bind=bind,
-        ),
-        RowRule(
-            rule_id="span_kinds_accepted",
-            violation=F.col(st)["bad_kind"] > 0,
-            detail=F.concat(
-                F.lit("bad kinds: "),
-                F.concat_ws(",", F.transform(bad_kinds, lambda s: F.coalesce(s["kind"], F.lit("NULL")))),
-            ),
-            bind=bind,
-        ),
-        RowRule(
-            rule_id="offsets_valid_native",
-            violation=(F.col(st)["null_off"] > 0) | (F.col(st)["neg_off"] > 0) | dup,
-            detail=F.concat(
-                F.lit("offsets="),
-                F.concat_ws(",", F.transform(sorted_offs, lambda o: o.cast("string"))),
-            ),
-            bind=bind,
-        ),
+        non_empty_array("spans"),
+        text_present_on_text_spans(),
+        media_ref_present_on_media_spans(),
+        span_kinds_accepted(DEFAULT_KINDS),
+        offsets_valid_native(),
     ]

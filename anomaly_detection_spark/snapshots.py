@@ -72,10 +72,11 @@ class SnapshotLog:
         snaps = self.snapshots()
         return snaps[-1]["snapshot_id"] if snaps else None
 
-    def _entry(self, snapshot_id: str) -> dict:
-        for e in self.snapshots():
+    def _sequence(self, snaps: list[dict], snapshot_id: str) -> int:
+        """Sequence number of ``snapshot_id`` in the listing ``snaps``."""
+        for e in snaps:
             if e["snapshot_id"] == snapshot_id:
-                return e
+                return e["sequence"]
         raise ValueError(
             f"unknown snapshot {snapshot_id!r} in log at {self.root}"
         )
@@ -124,7 +125,7 @@ class SnapshotLog:
         """Table state AS OF ``snapshot_id`` (time travel); latest if None."""
         snaps = self.snapshots()
         if snapshot_id is not None:
-            upto = self._entry(snapshot_id)["sequence"]
+            upto = self._sequence(snaps, snapshot_id)
             snaps = [e for e in snaps if e["sequence"] <= upto]
         return self._read_dirs([e["data_dir"] for e in snaps])
 
@@ -133,16 +134,16 @@ class SnapshotLog:
     ) -> DataFrame:
         """Rows appended AFTER ``start_snapshot_id`` (exclusive) up to
         ``end_snapshot_id`` (inclusive; latest if None) — Iceberg's
-        appends-only incremental scan, the per-snapshot revalidation shape."""
-        lo = self._entry(start_snapshot_id)["sequence"]
+        appends-only incremental scan, the per-snapshot revalidation shape.
+        Both ends resolve from one listing of the log."""
+        snaps = self.snapshots()
+        lo = self._sequence(snaps, start_snapshot_id)
         hi = (
-            self._entry(end_snapshot_id)["sequence"]
+            self._sequence(snaps, end_snapshot_id)
             if end_snapshot_id is not None
             else float("inf")
         )
-        dirs = [
-            e["data_dir"] for e in self.snapshots() if lo < e["sequence"] <= hi
-        ]
+        dirs = [e["data_dir"] for e in snaps if lo < e["sequence"] <= hi]
         return self._read_dirs(dirs)
 
 

@@ -1,6 +1,6 @@
 """Regression tests for round-5 ADVICE findings: int64-overflow hazards in
-ewma_control's squared 3σ band and spectral_top_direction's renormalizing
-product, requiredness tightening masked by a simultaneous type widening,
+ewma_control's squared 3σ band and ppm prediction and
+spectral_top_direction's renormalizing product, requiredness tightening masked by a simultaneous type widening,
 NULL zone-map envelopes mis-counted as pruned, and int-id wraparound in the
 line-dedup keeper encoding."""
 
@@ -28,6 +28,17 @@ def test_ewma_spike_after_quiet_history_flags(spark):
     # quiet days stay unflagged (no false positives from the widening)
     assert all(got[f"2024-01-{d:02d}"]["flag"] == 0 for d in range(2, 9))
 
+
+
+def test_ewma_prediction_survives_counts_above_int64_ppm_range(spark):
+    """pred_micro multiplied the int64 kernel sum (≈ 58 975·cnt) by 10⁶,
+    which overflows once counts pass ~1.56·10⁸/day; the numerator is
+    widened first, so a flat 2·10⁸/day series predicts exactly 2·10¹⁴."""
+    rows = [("g", f"2024-01-{d:02d}", 200_000_000) for d in range(1, 10)]
+    daily = spark.createDataFrame(rows, ["event_type", "day", "cnt"])
+    got = {r["day"]: r for r in ewma_control(daily).collect()}
+    assert got["2024-01-09"]["pred_micro"] == 200_000_000_000_000
+    assert got["2024-01-09"]["flag"] == 0
 
 def test_spectral_direction_survives_large_n(spark):
     """At n = 4·10⁴ max-scale rows the component sums reach ~6.8e14, so

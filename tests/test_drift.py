@@ -58,8 +58,11 @@ def test_psi_matches_numpy_oracle(snapshots):
 
 
 def test_drift_flags_only_drifted_partition(snapshots):
+    from anomaly_detection_spark.rules import builtin
+    from anomaly_detection_spark.rules.core import RuleContext
+
     cur, base = snapshots
-    v = drift.drift_violations(cur, base, psi_threshold=0.1)
+    v = builtin.psi_drift(base, threshold=0.1).build(cur, RuleContext())
     psi_parts = {r["partition"] for r in v.filter("rule_id = 'drift_psi:span_kind'").collect()}
     assert psi_parts == {f"p{N_PARTS - 1}"}
 

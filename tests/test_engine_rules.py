@@ -137,6 +137,64 @@ def test_passfail_matrix(result, docs_pd):
         assert row["rows_scanned"] == sizes[part]
 
 
+
+SPAN_RULES = ["text_present_on_text_spans", "media_ref_present_on_media_spans",
+              "span_kinds_accepted", "offsets_valid_native"]
+
+
+def _span_traversals(run: ValidationRun, docs) -> int:
+    plan = run.fused_row_violations(docs)._jdf.queryExecution()
+    return plan.optimizedPlan().toString().count("aggregate(spans")
+
+
+def test_config_span_rules_share_one_traversal(spark, docs, docs_pd):
+    """The four span rules compiled from config are the builders the
+    default suite uses: they flag the oracle's rows and walk the spans
+    array once between them."""
+    from anomaly_detection_spark.rules.config import suite_from_config
+
+    suite = suite_from_config([{"rule": rid} for rid in SPAN_RULES])
+    run = ValidationRun(spark, docs, suite)
+    got = {(r["partition"], r["rule_id"], r["doc_id"])
+           for r in run.fused_row_violations(docs).collect()}
+    want = {v for v in _oracle_row_violations(docs_pd) if v[1] in SPAN_RULES}
+    assert got == want and len(want) > 0
+    assert _span_traversals(run, docs) == 1
+
+
+def test_span_rules_over_different_kinds_bind_one_traversal_each(spark):
+    """``span_kinds_accepted`` over its own kinds next to rules over the
+    default kinds compiles (no bind conflict), with one span-stats
+    traversal per distinct kinds list, and flags the same rows as when
+    each rule walked the array itself."""
+    import hashlib
+    import json
+
+    from anomaly_detection_spark import datagen
+    from anomaly_detection_spark.rules.config import suite_from_config
+
+    suite = suite_from_config([
+        {"rule": "span_kinds_accepted", "kinds": ["text", "image"]},
+        {"rule": "text_present_on_text_spans"},
+        {"rule": "offsets_valid_native"},
+    ])
+    docs = datagen.generate_documents(spark, n_docs=500, n_partitions=4)
+    run = ValidationRun(spark, docs, suite)
+    assert _span_traversals(run, docs) == 2
+    rows = sorted(
+        (tuple(r) for r in run.run(resume=False).violations.collect()),
+        key=lambda r: tuple("" if v is None else v for v in r))
+    by_rule = {}
+    for r in rows:
+        by_rule[r[1]] = by_rule.get(r[1], 0) + 1
+    assert by_rule == {"span_kinds_accepted": 285,
+                       "text_present_on_text_spans": 1,
+                       "offsets_valid_native": 3}
+    # sha256 of the JSON of the sorted (partition, rule_id, doc_id, detail)
+    # rows the per-rule array walks produced on this input
+    assert hashlib.sha256(json.dumps(rows).encode()).hexdigest() == (
+        "0686c09c883b928ce6f9b80ed4164ff6ec0e56913fd3e7161d84b6290cb54b91")
+
 def _span_sequence_parity(spark, docs):
     """(partition, doc_id, detail) multisets: the native fused-pass rule vs
     the Arrow UDF that sorts spans by offset (the byte-for-byte oracle)."""

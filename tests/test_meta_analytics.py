@@ -223,6 +223,23 @@ def test_sampled_rates_with_bound_columns(spark):
     assert out[0]["n_viol"] == 1 and out[0]["sample_n"] == 2
 
 
+
+def test_preflight_rejects_a_bind_that_shadows_an_input_column(spark, docs):
+    """Preflight projects binds through the fused pass's code: an input
+    column carrying a bind's name is an error there too, not a column the
+    rule silently reads instead of its own expression."""
+    from anomaly_detection_spark.engine import ValidationRun
+    from anomaly_detection_spark.rules.core import RuleSet
+
+    shadowed = docs.withColumn("_span_offs", F.array(F.lit(1)))
+    rules = [builtin.span_sequence_valid_row()]
+    run = ValidationRun(spark, shadowed, RuleSet(row_rules=rules))
+    with pytest.raises(ValueError, match="collide with input columns") as fused:
+        run.fused_row_violations(shadowed)
+    with pytest.raises(ValueError) as pre:
+        sampled_violation_rates(shadowed, rules)
+    assert str(pre.value) == str(fused.value)
+
 # -------------------------------------------------------- benford_deviation
 
 def test_benford_deviation_planted(spark):

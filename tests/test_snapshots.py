@@ -64,6 +64,27 @@ def test_append_read_time_travel_incremental(spark, log_root):
     assert _ids(log.read_incremental("s2", "s3")) == _ids(c)
 
 
+
+def test_reads_resolve_from_one_log_listing(spark, log_root, monkeypatch):
+    """``read`` and ``read_incremental`` resolve both ends of their range
+    from ONE listing of the log, not one per snapshot id."""
+    log = SnapshotLog(spark, log_root)
+    for sid in ("s1", "s2", "s3"):
+        log.append(spark.createDataFrame([(sid,)], "doc_id string"), sid)
+    calls = []
+    listing = SnapshotLog.snapshots
+
+    def counted(self):
+        calls.append(1)
+        return listing(self)
+
+    monkeypatch.setattr(SnapshotLog, "snapshots", counted)
+    assert _ids(log.read("s2")) == ["s1", "s2"]
+    assert len(calls) == 1
+    calls.clear()
+    assert _ids(log.read_incremental("s1", "s3")) == ["s2", "s3"]
+    assert len(calls) == 1
+
 def test_duplicate_snapshot_id_rejected(spark, log_root):
     log = SnapshotLog(spark, log_root)
     log.append(spark.range(1).select(F.lit("x").alias("doc_id")), "s1")
