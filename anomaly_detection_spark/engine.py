@@ -31,11 +31,21 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.manifest import MANIFEST_SCHEMA
 from anomaly_detection_spark.rules.core import (
     VIOLATION_COLUMNS,
     RowRule,
     RuleContext,
     RuleSet,
+)
+
+# DDL of the violations and verdicts sinks (the metrics sink is the
+# manifest's MANIFEST_SCHEMA): the empty frames of a run with nothing
+# pending, and the schema ``run_validation`` reads its own sinks back with
+VIOLATIONS_SCHEMA = "partition string, rule_id string, doc_id string, detail string"
+VERDICTS_SCHEMA = (
+    "partition string, rule_id string, pass boolean, "
+    "violation_count long, rows_scanned long"
 )
 
 
@@ -346,9 +356,7 @@ class ValidationRun:
         )
 
     def _empty_violations(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "partition string, rule_id string, doc_id string, detail string"
-        )
+        return self.spark.createDataFrame([], VIOLATIONS_SCHEMA)
 
     # ------------------------------------------------------------------
     def run(self, resume: bool = True, persist: bool = True,
@@ -484,19 +492,10 @@ class ValidationRun:
         ).select("partition", "rule_id")
 
     def _empty_verdicts(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "partition string, rule_id string, pass boolean, "
-            "violation_count long, rows_scanned long",
-        )
+        return self.spark.createDataFrame([], VERDICTS_SCHEMA)
 
     def _empty_metrics(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "partition string, rule_id string, snapshot_id string, status string, "
-            "rows_scanned long, violation_count long, duration_ms long, "
-            "committed_at timestamp",
-        )
+        return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
 def dq_scores(panel: DataFrame, spec: dict[str, tuple[int, int]],

@@ -749,8 +749,10 @@ def referential(catalog_col: str = "media_ref", rule_id: str = "referential:medi
                         F.explode(F.col(f"spans.{catalog_col}")).alias(catalog_col))
             .filter(F.col(catalog_col).isNotNull())
         )
+        # duplicate catalog rows cannot change a left-anti join's output,
+        # so the catalog is broadcast as it is, without a distinct's shuffle
         dangling = refs.join(
-            F.broadcast(ctx.media_catalog.select(catalog_col).distinct()),
+            F.broadcast(ctx.media_catalog.select(catalog_col)),
             catalog_col, "left_anti",
         )
         return (

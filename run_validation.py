@@ -23,7 +23,9 @@ The same script runs unchanged at any parallelism; local smoke:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
+from concurrent.futures import Future, ThreadPoolExecutor
 
 
 def parse_args(argv: list[str]) -> argparse.Namespace:
@@ -221,10 +223,35 @@ def append_missing_pairs(spark, df, path: str,
     layout(df).write.mode("append").parquet(path)
 
 
+def start_branch(pool, spark, steps) -> Future:
+    """Submit ``steps`` to ``pool`` to run in order on one thread. The
+    thread takes the caller's Spark job group, local properties and tags,
+    as they are now, so its jobs are attributed like the caller's own."""
+    from pyspark.util import inheritable_thread_target
+
+    def branch() -> None:
+        for step in steps:
+            step()
+
+    return pool.submit(inheritable_thread_target(spark)(branch))
+
+
+def release_checkpoint(df) -> None:
+    """Unpersist the RDD that ``df.localCheckpoint()`` stored: the frame's
+    own ``unpersist`` does not reach it."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _inside(path: str, root: str) -> bool:
+    path, root = os.path.abspath(path), os.path.abspath(root)
+    return path == root or path.startswith(root + os.sep)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
-    from anomaly_detection_spark.engine import ValidationRun
+    from anomaly_detection_spark.engine import (
+        VERDICTS_SCHEMA, VIOLATIONS_SCHEMA, ValidationRun)
     from anomaly_detection_spark.manifest import RuleProgressManifest
     from anomaly_detection_spark.rules import builtin
     from anomaly_detection_spark.rules.core import RuleSet
@@ -290,44 +317,70 @@ def main(argv: list[str] | None = None) -> int:
         snapshot_id=args.snapshot_id, manifest=manifest,
     )
 
-    if args.preflight is not None:
-        # triage BEFORE paying for the full scan: row rules fused into one
-        # agg pass over a deterministic md5-bucket sample of the corpus
-        from pyspark.sql import functions as F
-
-        from anomaly_detection_spark.engine import sampled_violation_rates
-
-        pre = sampled_violation_rates(
-            docs, rules.row_rules, run.ctx, sample_pct=args.preflight)
-        pre.write.mode("overwrite").parquet(f"{args.output}/preflight")
-        worst = (
-            spark.read.parquet(f"{args.output}/preflight")
-            .orderBy(F.desc("est_ppm"), "partition", "rule_id")
-            .limit(1).collect()
-        )
-        if worst:
-            w = worst[0]
-            print(f"PREFLIGHT pct={args.preflight} "
-                  f"worst={w['partition']}/{w['rule_id']} "
-                  f"est_ppm={w['est_ppm']} sample_n={w['sample_n']}")
+    # The write_* steps below run on the output branches of the write-order
+    # block at the end of main; ``result``, ``pending`` and ``append`` are
+    # bound there before any branch starts.
+    def write_sink(name, df) -> None:
+        # the grid sinks are one cached partition already
+        layout = cluster_violations if name == "violations" else (lambda d: d)
+        if append:
+            append_missing_pairs(spark, df, f"{args.output}/{name}",
+                                 layout=layout)
         else:
-            print(f"PREFLIGHT pct={args.preflight} empty-sample")
-        if args.preflight_only:
-            if owns_session:
-                spark.stop()
-            return 0
+            layout(df).write.mode("overwrite").parquet(f"{args.output}/{name}")
 
-    result = run.run(resume=args.resume, commit_manifest=False)
+    def write_violations() -> None:
+        # Sink policy, not engine semantics: verdict/metric counts were
+        # already derived from the FULL violations frame inside run(), so
+        # capping here bounds what lands on disk without touching
+        # correctness.
+        sink_violations = result.violations
+        if args.max_violations_per_pair is not None:
+            from anomaly_detection_spark.engine import cap_violations
+
+            sink_violations = cap_violations(
+                result.violations, args.max_violations_per_pair)
+        write_sink("violations", sink_violations)
+
+    def read_violations():
+        """The FULL violations sink, read with its known schema."""
+        return spark.read.schema(VIOLATIONS_SCHEMA).parquet(
+            f"{args.output}/violations")
+
+    def export_csv() -> None:
+        # S5: CSV export is a projection of the (pair-deduped) parquet sink,
+        # not a second independent append — so a crash-retried increment
+        # can never double-write rows into the CSV either
+        read_violations().write.mode("overwrite").option(
+            "header", True).csv(args.export_csv)
+
+    def write_verdicts() -> None:
+        """The verdicts sink, then the diff against --diff-prev. That
+        directory may be this sink's own, so it is checkpointed before the
+        overwrite (``persist`` would not hold it: overwriting a path
+        re-caches every cached plan that reads the path, from the new
+        files) and released however the branch ends."""
+        prev = None
+        try:
+            if args.diff_prev:
+                prev = spark.read.parquet(args.diff_prev).localCheckpoint()
+            if pending:
+                write_sink("verdicts", result.verdicts)
+            if prev is not None:
+                write_verdict_diff(prev)
+        finally:
+            if prev is not None:
+                release_checkpoint(prev)
 
     def write_verdict_diff(prev) -> None:
         """Diff the FULL current verdict sink (not just this run's pending
         increment — a resumed increment would falsely mark every
-        already-committed failing pair 'resolved') against --diff-prev.
-        ``prev`` must be materialized BEFORE the sink writes: --diff-prev
-        may name this run's own verdicts dir."""
+        already-committed failing pair 'resolved') against ``prev``, the
+        materialized --diff-prev verdicts."""
         from anomaly_detection_spark.history import verdict_diff
 
-        cur = spark.read.parquet(f"{args.output}/verdicts")
+        cur = spark.read.schema(VERDICTS_SCHEMA).parquet(
+            f"{args.output}/verdicts")
         verdict_diff(cur, prev).write.mode("overwrite").parquet(
             f"{args.output}/verdict_diff")
 
@@ -372,7 +425,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         bad_ids = (
-            spark.read.parquet(f"{args.output}/violations")
+            read_violations()
             .select("doc_id").filter(F.col("doc_id").isNotNull())
             .distinct().withColumn("_q", F.lit(True))
         )
@@ -394,8 +447,7 @@ def main(argv: list[str] | None = None) -> int:
         suite size, never by the corpus."""
         from anomaly_detection_spark.engine import rule_cooccurrence
 
-        v = spark.read.parquet(f"{args.output}/violations")
-        rule_cooccurrence(v).write.mode("overwrite").parquet(
+        rule_cooccurrence(read_violations()).write.mode("overwrite").parquet(
             f"{args.output}/rule_cooccurrence")
 
     def write_slices() -> None:
@@ -405,8 +457,7 @@ def main(argv: list[str] | None = None) -> int:
         from anomaly_detection_spark.engine import violation_slices
 
         dims = [c.strip() for c in args.slice_dims.split(",") if c.strip()]
-        v = spark.read.parquet(f"{args.output}/violations")
-        violation_slices(docs, v, dims, ctx=run.ctx).write.mode(
+        violation_slices(docs, read_violations(), dims, ctx=run.ctx).write.mode(
             "overwrite").parquet(f"{args.output}/violation_slices")
 
     def write_fingerprints() -> None:
@@ -461,8 +512,48 @@ def main(argv: list[str] | None = None) -> int:
             ).write.mode("overwrite").parquet(
                 f"{args.output}/checksum_reconcile")
 
+    if args.preflight is not None:
+        # triage BEFORE paying for the full scan: row rules fused into one
+        # agg pass over a deterministic md5-bucket sample of the corpus
+        from pyspark.sql import functions as F
+
+        from anomaly_detection_spark.engine import sampled_violation_rates
+
+        pre = sampled_violation_rates(
+            docs, rules.row_rules, run.ctx, sample_pct=args.preflight)
+        pre.write.mode("overwrite").parquet(f"{args.output}/preflight")
+        worst = (
+            spark.read.parquet(f"{args.output}/preflight")
+            .orderBy(F.desc("est_ppm"), "partition", "rule_id")
+            .limit(1).collect()
+        )
+        if worst:
+            w = worst[0]
+            print(f"PREFLIGHT pct={args.preflight} "
+                  f"worst={w['partition']}/{w['rule_id']} "
+                  f"est_ppm={w['est_ppm']} sample_n={w['sample_n']}")
+        else:
+            print(f"PREFLIGHT pct={args.preflight} empty-sample")
+        if args.preflight_only:
+            if owns_session:
+                spark.stop()
+            return 0
+
     # Write order is the resume contract: data first, manifest last — a crash
     # between the sink writes and the commit re-evaluates, never skips.
+    # The outputs are written by up to four concurrent branches, each a
+    # sequence of steps on one driver thread; no branch reads another's
+    # output, and the manifest is committed only after every branch has
+    # finished without error (a failure is re-raised once every branch has
+    # finished, and then nothing is committed):
+    # - input-only: histograms, fingerprints, checksums. They read only the
+    #   input, so they start before the grid action (after it when
+    #   --baseline-hist lies under --output, which they may rewrite);
+    # - violations: the sink, then the outputs that read it back (CSV
+    #   export, quarantine, co-occurrence, slices);
+    # - verdicts: the sink, then the --diff-prev verdict diff;
+    # - metrics: the sink.
+    # Each branch thread inherits the caller's Spark job group and tags.
     # Mode: a resumed run with prior commits only computes NEW pairs, so it
     # appends to the previous outputs; a fresh (or fully re-evaluated) run
     # overwrites. Appends are IDEMPOTENT per (partition, rule_id): a crash
@@ -477,60 +568,49 @@ def main(argv: list[str] | None = None) -> int:
     # left untouched (the empty frames would clobber the previous run's
     # real results), but every requested derived output is still refreshed:
     # they derive from the input and the complete sinks, not the increment.
-    prev_verdicts = None
-    if args.diff_prev:
-        # materialize BEFORE the sink writes: --diff-prev may name this
-        # run's own verdicts dir, which mode=overwrite is about to replace
-        prev_verdicts = spark.read.parquet(args.diff_prev).localCheckpoint()
+    input_steps = [step for flag, step in (
+        (args.emit_histograms, write_histograms),
+        (args.fingerprint_cols, write_fingerprints),
+        (args.emit_checksums, write_checksums)) if flag]
+    input_first = not (args.baseline_hist
+                       and _inside(args.baseline_hist, args.output))
+    result = None
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            branches = []
+            if input_steps and input_first:
+                branches.append(start_branch(pool, spark, input_steps))
+            result = run.run(resume=args.resume, commit_manifest=False)
+            if input_steps and not input_first:
+                branches.append(start_branch(pool, spark, input_steps))
+            pending = not result.nothing_pending
+            append = pending and args.resume and manifest is not None and (
+                manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0)
 
-    if not result.nothing_pending:
-        # Sink policy, not engine semantics: verdict/metric counts were
-        # already derived from the FULL violations frame inside run(), so
-        # capping here bounds what lands on disk without touching
-        # correctness.
-        sink_violations = result.violations
-        if args.max_violations_per_pair is not None:
-            from anomaly_detection_spark.engine import cap_violations
-
-            sink_violations = cap_violations(
-                result.violations, args.max_violations_per_pair)
-        sinks = {"violations": sink_violations, "verdicts": result.verdicts,
-                 "metrics": result.metrics}
-        append = args.resume and manifest is not None and (
-            manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0)
-        for name, df in sinks.items():
-            # the grid sinks are one cached partition already
-            layout = cluster_violations if name == "violations" \
-                else (lambda d: d)
-            if append:
-                append_missing_pairs(spark, df, f"{args.output}/{name}",
-                                     layout=layout)
-            else:
-                layout(df).write.mode("overwrite").parquet(
-                    f"{args.output}/{name}")
-    if prev_verdicts is not None:
-        write_verdict_diff(prev_verdicts)
-    if args.export_csv:
-        # S5: CSV export is a projection of the (pair-deduped) parquet sink,
-        # not a second independent append — so a crash-retried increment
-        # can never double-write rows into the CSV either
-        spark.read.parquet(f"{args.output}/violations").write.mode(
-            "overwrite").option("header", True).csv(args.export_csv)
-    if args.emit_histograms:
-        # idempotent: re-running snapshot S only rewrites subdir S
-        write_histograms()
-    if args.quarantine:
-        write_quarantine()
-    if args.cooccurrence_report:
-        write_cooccurrence()
-    if args.slice_dims:
-        write_slices()
-    if args.fingerprint_cols:
-        write_fingerprints()
-    if args.emit_checksums:
-        write_checksums()
-    if manifest is not None and not result.nothing_pending:
-        manifest.commit(result.metrics)
+            violation_steps = [step for flag, step in (
+                (pending, write_violations),
+                (args.export_csv, export_csv),
+                (args.quarantine, write_quarantine),
+                (args.cooccurrence_report, write_cooccurrence),
+                (args.slice_dims, write_slices)) if flag]
+            if violation_steps:
+                branches.append(start_branch(pool, spark, violation_steps))
+            if pending or args.diff_prev:
+                branches.append(start_branch(pool, spark, [write_verdicts]))
+            if pending:
+                branches.append(start_branch(
+                    pool, spark,
+                    [lambda: write_sink("metrics", result.metrics)]))
+            # the first failure in submission order is raised; leaving the
+            # pool waits for every other branch before it propagates
+            for branch in branches:
+                branch.result()
+        if manifest is not None and pending:
+            manifest.commit(result.metrics)
+    finally:
+        if result is not None:
+            result.verdicts.unpersist()
+            result.violations.unpersist()
 
     n_fail = sum(not r["pass"] for r in result.grid)
     if args.report_json:
@@ -585,7 +665,10 @@ def main(argv: list[str] | None = None) -> int:
         if args.diff_prev:
             from pyspark.sql import functions as F
 
-            diff = spark.read.parquet(f"{args.output}/verdict_diff")
+            from anomaly_detection_spark.history import VERDICT_DIFF_SCHEMA
+
+            diff = spark.read.schema(VERDICT_DIFF_SCHEMA).parquet(
+                f"{args.output}/verdict_diff")
             report["verdict_diff"] = {
                 r["status"]: r["n"]
                 for r in diff.groupBy("status").agg(
@@ -594,8 +677,6 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.report_json, "w") as fh:
             json.dump(report, fh, indent=2)
     print(f"VALIDATION_DONE snapshot={args.snapshot_id} failing_pairs={n_fail}")
-    result.verdicts.unpersist()
-    result.violations.unpersist()
     if owns_session:
         spark.stop()
     return 0

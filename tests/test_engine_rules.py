@@ -103,6 +103,22 @@ def test_referential_exact(result, docs_pd, catalog):
     assert got == expected and len(expected) > 0
 
 
+def test_referential_ignores_duplicate_catalog_rows(spark, docs, catalog):
+    """The catalog is broadcast without a distinct: repeating every catalog
+    row leaves the referential violation rows unchanged."""
+    from collections import Counter
+
+    from anomaly_detection_spark.rules.core import RuleContext
+
+    def rows(cat):
+        return Counter(builtin.referential().build(
+            docs, RuleContext(media_catalog=cat)).collect())
+
+    once = rows(catalog)
+    assert sum(once.values()) > 0
+    assert rows(catalog.unionByName(catalog)) == once
+
+
 def test_span_sequence_arrow_udf_matches_native(result):
     """input_hint invariant: the span-sequence rule (whose details are
     parity-tested against the Arrow UDF below) and the default suite's

@@ -38,6 +38,28 @@ def test_referential_uses_broadcast_join(docs_on_disk, catalog):
     assert "SortMergeJoin" not in plan
 
 
+def test_referential_broadcasts_the_catalog_without_a_shuffle(docs_on_disk,
+                                                              catalog):
+    """No Exchange sits under the catalog's BroadcastExchange: the build side
+    is broadcast as read, with no distinct (a shuffle and a Spark job)."""
+    tree = plan_of(
+        builtin.referential().build(docs_on_disk, RuleContext(media_catalog=catalog))
+    ).split("\n\n")[0].splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    at = [k for k, ln in enumerate(tree) if "BroadcastExchange" in ln]
+    assert len(at) == 1
+    below = []
+    for ln in tree[at[0] + 1:]:
+        if depth(ln) <= depth(tree[at[0]]):
+            break
+        below.append(ln)
+    assert below
+    assert not [ln for ln in below if "Exchange" in ln], below
+
+
 def test_uniqueness_has_partial_aggregation(docs_on_disk):
     """hashagg strategy must plan a map-side partial aggregate before the
     shuffle (each distinct key ships ≤1 row per map task)."""
