@@ -33,6 +33,10 @@ def categorical_histogram(
     )
 
 
+# the columns of a stored span_kind_histogram (``--emit-histograms``)
+SPAN_KIND_HIST_SCHEMA = "partition string, bin string, count long"
+
+
 def span_kind_histogram(docs: DataFrame, partition_col: str = "partition") -> DataFrame:
     ex = docs.select(
         F.col(partition_col).alias("partition"), F.explode("spans").alias("s")

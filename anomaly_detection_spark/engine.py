@@ -20,6 +20,10 @@ PASS row. ``ValidationRun.run`` materialises that grid ONCE, in one action,
 and ``verdicts``/``metrics`` read the cached result — sinks, the manifest
 commit, the failing-pair count and the report never re-run the rule
 topology.
+
+A resume takes the same path over the whole snapshot and leaves the pairs
+already committed out of all three outputs, so every pending pair gets a
+clean run's answer.
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.manifest import MANIFEST_SCHEMA
+from anomaly_detection_spark.manifest import join_pairs
 from anomaly_detection_spark.rules.core import (
     VIOLATION_COLUMNS,
     RowRule,
@@ -40,8 +44,8 @@ from anomaly_detection_spark.rules.core import (
 )
 
 # DDL of the violations and verdicts sinks (the metrics sink is the
-# manifest's MANIFEST_SCHEMA): the empty frames of a run with nothing
-# pending, and the schema ``run_validation`` reads its own sinks back with
+# manifest's MANIFEST_SCHEMA): the schema ``run_validation`` reads its own
+# sinks back with
 VIOLATIONS_SCHEMA = "partition string, rule_id string, doc_id string, detail string"
 VERDICTS_SCHEMA = (
     "partition string, rule_id string, pass boolean, "
@@ -293,12 +297,9 @@ class ValidationResult:
     verdicts: DataFrame
     violations: DataFrame
     metrics: DataFrame
-    #: the rows of ``verdicts``, collected by the action that built it
+    #: the rows of ``verdicts``, collected by the action that built it;
+    #: empty when a resume finds every pair of the snapshot committed
     grid: list[Row]
-    #: True when a resume found every planned (partition, rule_id) pair
-    #: already committed — the frames are empty and sinks must NOT be
-    #: overwritten with them.
-    nothing_pending: bool = False
 
 
 class ValidationRun:
@@ -331,7 +332,7 @@ class ValidationRun:
         One scan; Catalyst fuses everything into whole-stage codegen."""
         p, d = self.ctx.partition_col, self.ctx.doc_id_col
         if not self.rules.row_rules:
-            return self._empty_violations()
+            return self.spark.createDataFrame([], VIOLATIONS_SCHEMA)
         docs = _project_binds(docs, self.rules.row_rules)
         hits = F.array(*[
             F.when(
@@ -354,9 +355,6 @@ class ValidationRun:
                 F.col("_v.detail").alias("detail"),
             )
         )
-
-    def _empty_violations(self) -> DataFrame:
-        return self.spark.createDataFrame([], VIOLATIONS_SCHEMA)
 
     # ------------------------------------------------------------------
     def run(self, resume: bool = True, persist: bool = True,
@@ -384,30 +382,20 @@ class ValidationRun:
         input, so caching them is bounded by the defect rate, not the
         snapshot size.
 
+        With a ``manifest`` and ``resume=True`` the rules still see the
+        whole snapshot (a doc_id duplicated across a committed and a pending
+        partition is still flagged), and the same action leaves the pairs
+        committed for ``snapshot_id`` out of the grid and the violations.
+
         ``commit_manifest=False`` skips the internal manifest commit so the
         caller can write its sinks FIRST and commit afterwards (the resume
         contract: data first, manifest last — a crash in between re-evaluates,
         never skips). ``run_validation.py`` uses this; library callers that
-        don't write sinks can keep the default.
+        don't write sinks can keep the default. An empty grid commits
+        nothing.
         """
         docs = self.documents
         p = self.ctx.partition_col
-
-        pending_pairs = None  # (partition, rule_id) DataFrame or None = all
-        if self.manifest is not None and resume:
-            planned = self._planned_grid(docs)
-            pending_pairs = self.manifest.pending(planned, self.snapshot_id)
-            pending_parts = [
-                r["partition"] for r in pending_pairs.select("partition").distinct().collect()
-            ]
-            if not pending_parts:
-                return ValidationResult(
-                    self._empty_verdicts(), self._empty_violations(),
-                    self._empty_metrics(), [], nothing_pending=True,
-                )
-            # Partition pruning for resume: only rescan partitions with work.
-            docs = docs.filter(F.col(p).isin(pending_parts))
-
         parts = docs.groupBy(F.col(p).alias("partition")).agg(
             F.count("*").alias("rows_scanned")
         )
@@ -419,11 +407,10 @@ class ValidationRun:
             )
 
         grid = self._with_rules(parts)
-        if pending_pairs is not None:
-            grid = grid.join(pending_pairs, ["partition", "rule_id"], "left_semi")
-            violations = violations.join(
-                pending_pairs, ["partition", "rule_id"], "left_semi"
-            )
+        if self.manifest is not None and resume:
+            done = self.manifest.completed_pairs(self.snapshot_id)
+            grid = join_pairs(grid, done, "left_anti")
+            violations = join_pairs(violations, done, "left_anti")
 
         if persist:
             violations = violations.persist()
@@ -434,7 +421,7 @@ class ValidationRun:
         # sink one file; cached JVM-side, so no consumer re-runs the rules
         # or starts Python workers
         verdicts = (
-            grid.join(counts, ["partition", "rule_id"], "left")
+            join_pairs(grid, counts, "left")
             .select(
                 "partition",
                 "rule_id",
@@ -469,7 +456,7 @@ class ValidationRun:
             F.lit(duration_ms).alias("duration_ms"),
             F.lit(committed_at).alias("committed_at"),
         )
-        if self.manifest is not None and commit_manifest:
+        if self.manifest is not None and commit_manifest and grid_rows:
             self.manifest.commit(metrics)
         return ValidationResult(verdicts, violations, metrics, grid_rows)
 
@@ -484,18 +471,6 @@ class ValidationRun:
             for rid, ppm in self.rules.rule_budgets
         ]).cast("array<struct<rule_id:string,max_violation_ppm:bigint>>")
         return frame.select("*", F.inline(rules))
-
-    def _planned_grid(self, docs: DataFrame) -> DataFrame:
-        p = self.ctx.partition_col
-        return self._with_rules(
-            docs.select(F.col(p).alias("partition")).distinct()
-        ).select("partition", "rule_id")
-
-    def _empty_verdicts(self) -> DataFrame:
-        return self.spark.createDataFrame([], VERDICTS_SCHEMA)
-
-    def _empty_metrics(self) -> DataFrame:
-        return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
 
 def dq_scores(panel: DataFrame, spec: dict[str, tuple[int, int]],

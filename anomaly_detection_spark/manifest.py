@@ -8,9 +8,9 @@ fileset (Iceberg/Delta would make this a real atomic snapshot commit; the
 parquet fallback appends a uniquely-named subdirectory, which is atomic
 enough for single-writer runs and keeps the sandbox dependency-free).
 
-Resume semantics: ``pending(planned)`` anti-joins the planned
-(partition × rule) grid against completed pairs for the same snapshot —
-already-committed pairs are never re-evaluated (north_rule resumability).
+Resume semantics: a resumed run evaluates the whole snapshot and leaves the
+pairs ``completed_pairs`` returns out of its outputs (``join_pairs``): a
+clean run's outputs minus the pairs earlier attempts committed.
 """
 
 from __future__ import annotations
@@ -61,8 +61,13 @@ class RuleProgressManifest:
             .distinct()
         )
 
-    def pending(self, planned: DataFrame, snapshot_id: str) -> DataFrame:
-        """planned(partition, rule_id) minus completed — the work queue."""
-        return planned.join(
-            self.completed_pairs(snapshot_id), ["partition", "rule_id"], "left_anti"
-        )
+
+def join_pairs(df: DataFrame, other: DataFrame, how: str) -> DataFrame:
+    """``df`` joined ``how`` to ``other`` on (partition, rule_id), keeping
+    ``df``'s key columns. A NULL partition matches a NULL partition: it is a
+    partition of the grid like any other."""
+    other = other.withColumnRenamed("partition", "_p") \
+        .withColumnRenamed("rule_id", "_r")
+    on = F.col("partition").eqNullSafe(F.col("_p")) \
+        & (F.col("rule_id") == F.col("_r"))
+    return df.join(other, on, how).drop("_p", "_r")

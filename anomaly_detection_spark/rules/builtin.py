@@ -353,10 +353,11 @@ def span_sequence_valid_row(spans_col: str = "spans",
 def unique(col: str = "doc_id", rule_id: str = "unique:doc_id") -> DatasetRule:
     """doc_id uniqueness at 10^12 rows — pure shuffle aggregation, no collect.
 
-    ``groupBy(doc_id)`` with ``count`` and ``collect_set(partition)``:
+    ``groupBy(doc_id)`` with ``count`` and the set of partitions:
     Catalyst plans a partial (map-side) aggregate before the single hash
     shuffle, so each distinct key ships at most one row per map task, and
-    the partitions of duplicated keys come out of the same aggregate.
+    the partitions of duplicated keys come out of the same aggregate. The
+    set holds each partition in a struct, so the NULL partition is kept.
     """
 
     def build(docs: DataFrame, ctx: RuleContext) -> DataFrame:
@@ -369,9 +370,10 @@ def unique(col: str = "doc_id", rule_id: str = "unique:doc_id") -> DatasetRule:
         # number of logical partitions a key can appear in.
         hits = (
             keyed.groupBy("doc_id")
-            .agg(F.count("*").alias("_n"), F.collect_set("partition").alias("_ps"))
+            .agg(F.count("*").alias("_n"),
+                 F.collect_set(F.struct("partition")).alias("_ps"))
             .filter(F.col("_n") > 1)
-            .select(F.explode("_ps").alias("partition"), "doc_id", "_n")
+            .select(F.explode("_ps.partition").alias("partition"), "doc_id", "_n")
         )
         return hits.select(
             F.col("partition"),

@@ -23,7 +23,6 @@ The same script runs unchanged at any parallelism; local smoke:
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 from concurrent.futures import Future, ThreadPoolExecutor
 
@@ -39,7 +38,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                     help="previous-snapshot documents path; enables PSI/KS/quantile drift rules")
     ap.add_argument("--snapshot-id", default="s0")
     ap.add_argument("--resume", action="store_true",
-                    help="skip (partition, rule_id) pairs already committed for this snapshot")
+                    help="leave the (partition, rule_id) pairs already "
+                         "committed for this snapshot out of the outputs")
     ap.add_argument("--format", default="parquet",
                     choices=["parquet", "iceberg", "snaplog"],
                     help="input format: plain parquet path, Iceberg table "
@@ -191,9 +191,7 @@ def cluster_violations(violations):
         .sortWithinPartitions("partition", "rule_id", "doc_id", "detail")
 
 
-def append_missing_pairs(spark, df, path: str,
-                         keys: tuple[str, ...] = ("partition", "rule_id"),
-                         layout=lambda d: d) -> None:
+def append_missing_pairs(spark, df, path: str, layout=lambda d: d) -> None:
     """Append ``df`` to the parquet sink at ``path``, skipping rows whose
     (partition, rule_id) the sink ALREADY holds — the idempotent half of the
     data-first/manifest-last resume contract. A crash between sink writes
@@ -202,12 +200,15 @@ def append_missing_pairs(spark, df, path: str,
     sinks, not others, depending on where the crash landed). Exactly-once
     per pair holds as long as each parquet job commit is atomic; a torn job
     commit (partial pair) needs a transactional (Iceberg/Delta) sink, where
-    the whole run is one atomic commit instead.
+    the whole run is one atomic commit instead. A NULL partition is held like
+    any other (``manifest.join_pairs``).
 
     ``layout`` is applied to the rows left after that filter, so the
     appended files are laid out as an overwrite would lay them out (see
     ``cluster_violations``); a join placed after it would reshuffle them."""
     from pyspark.errors import AnalysisException
+
+    from anomaly_detection_spark.manifest import join_pairs
 
     try:
         existing = spark.read.parquet(path)
@@ -219,7 +220,8 @@ def append_missing_pairs(spark, df, path: str,
         if exc.getCondition() != "PATH_NOT_FOUND":
             raise
     else:
-        df = df.join(existing.select(*keys).distinct(), list(keys), "left_anti")
+        df = join_pairs(df, existing.select("partition", "rule_id"),
+                        "left_anti")
     layout(df).write.mode("append").parquet(path)
 
 
@@ -242,11 +244,6 @@ def release_checkpoint(df) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def _inside(path: str, root: str) -> bool:
-    path, root = os.path.abspath(path), os.path.abspath(root)
-    return path == root or path.startswith(root + os.sep)
-
-
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
@@ -264,6 +261,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     owns_session = SparkSession.getActiveSession() is None
+    base_hist = None
     spark = get_spark(app_name=f"validate:{args.snapshot_id}")
     docs = read_table(
         spark, args.input, fmt=args.format,
@@ -298,9 +296,20 @@ def main(argv: list[str] | None = None) -> int:
         rules.add(builtin.row_count_drift(base_docs, max_rel_delta=args.max_row_delta))
     elif args.baseline_hist:
         # drift without touching baseline DATA: the stored histogram is the
-        # whole baseline state the PSI check needs
-        rules.add(builtin.psi_drift_from_hist(
-            spark.read.parquet(args.baseline_hist)))
+        # whole baseline state the PSI check needs. It is metadata-sized and
+        # read into a checkpoint here (with its DDL: the checkpoint's job
+        # takes the place of a schema-inference job), so no plan of this run
+        # reads its files: the histogram write may rewrite them, and a write
+        # re-caches every cached plan that reads its path, from the new files.
+        from anomaly_detection_spark.drift import SPAN_KIND_HIST_SCHEMA
+
+        base_hist = spark.read.schema(SPAN_KIND_HIST_SCHEMA).parquet(
+            args.baseline_hist)
+        if not base_hist.inputFiles():
+            raise FileNotFoundError(
+                f"--baseline-hist {args.baseline_hist}: no histogram files")
+        base_hist = base_hist.localCheckpoint()
+        rules.add(builtin.psi_drift_from_hist(base_hist))
     if args.expect_schema:
         import json as _json
 
@@ -391,29 +400,22 @@ def main(argv: list[str] | None = None) -> int:
         --baseline-hist. Incremental scans add their commit as a NEW
         subdir; the reader merges subdirs exactly (histogram counts are
         additive), so the stored baseline is always the whole-snapshot
-        distribution, never just the last increment. Writing per-snapshot
-        subdirs (not a read-merge-overwrite of one file) keeps the sink
-        IDEMPOTENT under the crash-retry resume contract: re-running
-        snapshot S overwrites only subdir S, never double-folds it."""
+        distribution, never just the last increment. A full scan is the
+        complete snapshot state and overwrites the whole directory, so no
+        other commit's subdir can double-count rows it saw; an incremental
+        scan overwrites only its own subdir (dynamic partition overwrite),
+        so re-running snapshot S never double-folds it. The Spark writer
+        does both, on any filesystem Spark writes to."""
+        from pyspark.sql import functions as F
+
         from anomaly_detection_spark import drift as _drift
 
-        base = f"{args.output}/span_kind_hist"
-        hist = _drift.span_kind_histogram(docs, "partition")
-        hist.write.mode("overwrite").parquet(
-            f"{base}/snapshot={args.snapshot_id}")
-        if not args.incremental_from:
-            # full scan = the complete snapshot state: drop other commits'
-            # subdirs so they can't double-count rows the full scan saw.
-            # (Local-fs cleanup; an object-store/Iceberg deployment does
-            # this as a metadata delete in the same transaction.)
-            import os as _os
-            import shutil as _shutil
-
-            for sub in _os.listdir(base):
-                if sub.startswith("snapshot=") and \
-                        sub != f"snapshot={args.snapshot_id}":
-                    _shutil.rmtree(_os.path.join(base, sub),
-                                   ignore_errors=True)
+        _drift.span_kind_histogram(docs, "partition").withColumn(
+            "snapshot", F.lit(args.snapshot_id)
+        ).write.mode("overwrite").partitionBy("snapshot").option(
+            "partitionOverwriteMode",
+            "dynamic" if args.incremental_from else "static",
+        ).parquet(f"{args.output}/span_kind_hist")
 
     def write_quarantine() -> None:
         """Route the INPUT corpus by verdict from the FULL violations sink
@@ -535,6 +537,8 @@ def main(argv: list[str] | None = None) -> int:
         else:
             print(f"PREFLIGHT pct={args.preflight} empty-sample")
         if args.preflight_only:
+            if base_hist is not None:
+                release_checkpoint(base_hist)
             if owns_session:
                 spark.stop()
             return 0
@@ -547,45 +551,39 @@ def main(argv: list[str] | None = None) -> int:
     # finished without error (a failure is re-raised once every branch has
     # finished, and then nothing is committed):
     # - input-only: histograms, fingerprints, checksums. They read only the
-    #   input, so they start before the grid action (after it when
-    #   --baseline-hist lies under --output, which they may rewrite);
+    #   input, so they start before the grid action (the --baseline-hist
+    #   they may rewrite is a checkpoint by then);
     # - violations: the sink, then the outputs that read it back (CSV
     #   export, quarantine, co-occurrence, slices);
     # - verdicts: the sink, then the --diff-prev verdict diff;
     # - metrics: the sink.
     # Each branch thread inherits the caller's Spark job group and tags.
-    # Mode: a resumed run with prior commits only computes NEW pairs, so it
-    # appends to the previous outputs; a fresh (or fully re-evaluated) run
-    # overwrites. Appends are IDEMPOTENT per (partition, rule_id): a crash
-    # after some sink writes but before the manifest commit leaves those
-    # pairs pending, and the retry must not append their rows a second time
-    # — each sink drops pairs it already holds (see append_missing_pairs).
+    # Mode: a resumed run with prior commits outputs only the pairs not yet
+    # committed and appends them (none when all are: the sinks and the
+    # manifest stay as they are); a fresh run overwrites. Appends are
+    # IDEMPOTENT per (partition, rule_id): a crash after some sink writes
+    # but before the manifest commit leaves those pairs pending, and the
+    # retry must not append their rows a second time — each sink drops
+    # pairs it already holds (see append_missing_pairs).
     # With Iceberg/Delta sinks all of this becomes one atomic commit.
     # The violations sink is laid out where it meets the writer, after the
     # cap and after the resume filter: its file count follows bytes, not the
     # partitions of the rule branches that produced it (cluster_violations).
-    # When a resume finds nothing pending, the sinks and the manifest are
-    # left untouched (the empty frames would clobber the previous run's
-    # real results), but every requested derived output is still refreshed:
-    # they derive from the input and the complete sinks, not the increment.
     input_steps = [step for flag, step in (
         (args.emit_histograms, write_histograms),
         (args.fingerprint_cols, write_fingerprints),
         (args.emit_checksums, write_checksums)) if flag]
-    input_first = not (args.baseline_hist
-                       and _inside(args.baseline_hist, args.output))
     result = None
     try:
         with ThreadPoolExecutor(max_workers=4) as pool:
             branches = []
-            if input_steps and input_first:
+            if input_steps:
                 branches.append(start_branch(pool, spark, input_steps))
             result = run.run(resume=args.resume, commit_manifest=False)
-            if input_steps and not input_first:
-                branches.append(start_branch(pool, spark, input_steps))
-            pending = not result.nothing_pending
-            append = pending and args.resume and manifest is not None and (
+            append = args.resume and manifest is not None and (
                 manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0)
+            # an empty grid appends nothing: the sinks stay as they are
+            pending = bool(result.grid) or not append
 
             violation_steps = [step for flag, step in (
                 (pending, write_violations),
@@ -605,12 +603,14 @@ def main(argv: list[str] | None = None) -> int:
             # pool waits for every other branch before it propagates
             for branch in branches:
                 branch.result()
-        if manifest is not None and pending:
+        if manifest is not None and result.grid:
             manifest.commit(result.metrics)
     finally:
         if result is not None:
             result.verdicts.unpersist()
             result.violations.unpersist()
+        if base_hist is not None:
+            release_checkpoint(base_hist)
 
     n_fail = sum(not r["pass"] for r in result.grid)
     if args.report_json:

@@ -199,6 +199,17 @@ def test_nothing_pending_still_writes_derived_outputs(spark, snapshots,
         "--snapshot-id", "s1",
     ]
     assert run_validation.main(common) == 0
+
+    def files():
+        """Every file of the sinks and the manifest, with its mtime."""
+        import os
+
+        return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+                for root in ("out/violations", "out/verdicts", "out/metrics",
+                             "manifest")
+                for d, _, fs in os.walk(tmp_path / root) for f in fs}
+
+    before = files()
     # second run: everything committed -> nothing pending; derived outputs
     # requested only now must still be produced
     capsys.readouterr()
@@ -211,6 +222,7 @@ def test_nothing_pending_still_writes_derived_outputs(spark, snapshots,
     line = [ln for ln in capsys.readouterr().out.splitlines()
             if "VALIDATION_DONE" in ln][0]
     assert int(line.rsplit("=", 1)[1]) == 0
+    assert files() == before  # the sinks and the manifest are untouched
     import json
 
     with open(tmp_path / "report.json") as fh:

@@ -119,6 +119,46 @@ def test_referential_ignores_duplicate_catalog_rows(spark, docs, catalog):
     assert rows(catalog.unionByName(catalog)) == once
 
 
+_NULL_PART_DOCS = "partition string, doc_id string, spans array<int>"
+
+
+def test_a_null_partition_keeps_its_violation_count(spark):
+    """A NULL partition is a partition of the grid: its violations count
+    toward its own verdict."""
+    docs = spark.createDataFrame(
+        [(None, None, [1]), (None, "d1", [1]), ("p0", "d2", [1])],
+        _NULL_PART_DOCS)
+    res = ValidationRun(
+        spark, docs, RuleSet(row_rules=[builtin.not_null("doc_id")])
+    ).run(resume=False)
+    assert sorted(res.grid, key=lambda r: r["partition"] or "") == [
+        (None, "not_null:doc_id", False, 1, 2),
+        ("p0", "not_null:doc_id", True, 0, 1),
+    ]
+    res.verdicts.unpersist()
+    res.violations.unpersist()
+
+
+def test_unique_flags_duplicates_in_a_null_partition(spark):
+    """``unique`` flags a doc_id duplicated inside the NULL partition, with
+    one row per (partition, doc_id) as for any other partition."""
+    from collections import Counter
+
+    from anomaly_detection_spark.rules.core import RuleContext
+
+    docs = spark.createDataFrame(
+        [(None, "x", [1]), (None, "x", [1]), ("p0", "x", [1]),
+         (None, "y", [1]), (None, "y", [1]), ("p1", "z", [1])],
+        _NULL_PART_DOCS)
+    got = Counter(tuple(r) for r in
+                  builtin.unique("doc_id").build(docs, RuleContext()).collect())
+    assert got == Counter([
+        (None, "unique:doc_id", "x", "duplicate doc_id x3"),
+        ("p0", "unique:doc_id", "x", "duplicate doc_id x3"),
+        (None, "unique:doc_id", "y", "duplicate doc_id x2"),
+    ])
+
+
 def test_span_sequence_arrow_udf_matches_native(result):
     """input_hint invariant: the span-sequence rule (whose details are
     parity-tested against the Arrow UDF below) and the default suite's

@@ -4,6 +4,8 @@ test plan item 3)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,8 +28,12 @@ def test_full_run_then_noop(spark, docs, manifest):
     r1 = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s1").run()
     n1 = r1.verdicts.count()
     assert n1 == 8 * 2  # 8 partitions x 2 rules
+    commits = os.listdir(manifest.path)
     r2 = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s1").run()
     assert r2.verdicts.count() == 0
+    assert r2.grid == []
+    # nothing left to evaluate: nothing is committed, not even an empty set
+    assert os.listdir(manifest.path) == commits
     # a new snapshot is fresh work
     r3 = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s2").run()
     assert r3.verdicts.count() == n1
@@ -147,6 +153,12 @@ def test_main_releases_its_caches(spark, main_args):
     assert run_validation.main(
         main_args + ["--diff-prev", f"{out}/verdicts"]) == 0
     assert persisted() - before == set()
+    # so is --baseline-hist, on the preflight-only exit too
+    assert run_validation.main(main_args + ["--emit-histograms"]) == 0
+    for extra in ([], ["--preflight", "10", "--preflight-only"]):
+        assert run_validation.main(main_args + [
+            "--baseline-hist", f"{out}/span_kind_hist", *extra]) == 0
+        assert persisted() - before == set()
 
 
 def _rows(df, drop=()):
@@ -223,57 +235,115 @@ def test_main_reads_its_own_sinks_back_with_their_schema(spark, main_args,
     assert all(has for _, has in own), own
 
 
+@pytest.fixture(scope="module")
+def snapshot_inputs(spark, docs, catalog, tmp_path_factory):
+    """The fixture docs read whole (``full``, snapshot s1) and as the
+    increment s2 of a snapshot log whose s1 holds p0..p3 (``incremental``),
+    each as the leading arguments of ``main``; and a --diff-prev verdicts
+    dir."""
+    from anomaly_detection_spark.engine import VERDICTS_SCHEMA
+    from anomaly_detection_spark.snapshots import SnapshotLog
+
+    root = tmp_path_factory.mktemp("snapshot_inputs")
+    docs.write.parquet(str(root / "docs"))
+    catalog.write.parquet(str(root / "catalog"))
+    log = SnapshotLog(spark, str(root / "log"))
+    first = F.col("partition").isin("p0", "p1", "p2", "p3")
+    log.append(docs.filter(first), "s1")
+    log.append(docs.filter(~first), "s2")
+    prev = str(root / "prev")
+    spark.createDataFrame([("p4", "not_null:doc_id", False, 3, 10)],
+                          VERDICTS_SCHEMA).write.parquet(prev)
+    catalog_args = ["--catalog", str(root / "catalog")]
+    return {
+        "full": ["--input", str(root / "docs"), "--snapshot-id", "s1",
+                 *catalog_args],
+        "incremental": ["--input", str(root / "log"), "--format", "snaplog",
+                        "--iceberg-snapshot-id", "s2",
+                        "--incremental-from", "s1", "--snapshot-id", "s2",
+                        *catalog_args],
+        "prev": prev,
+    }
+
+
+@pytest.fixture(scope="module")
+def failure_runs(snapshot_inputs, tmp_path_factory):
+    """``argv(mode, name)``: main's arguments for a run of ``mode`` under
+    ``{root}/{mode}/{name}`` with --diff-prev, --emit-histograms and
+    --export-csv; and a clean run of each mode, under ``clean``."""
+    import run_validation
+
+    root = tmp_path_factory.mktemp("failure_runs")
+
+    def argv(mode, name, *extra):
+        out = root / mode / name
+        return snapshot_inputs[mode] + [
+            "--output", str(out / "out"), "--manifest", str(out / "manifest"),
+            "--diff-prev", snapshot_inputs["prev"], "--emit-histograms",
+            "--export-csv", str(out / "csv"), *extra]
+
+    for mode in ("full", "incremental"):
+        assert run_validation.main(argv(mode, "clean")) == 0
+    return root, argv
+
+
+def _committed(path):
+    """Whether a Spark job committed output under ``path``: its _SUCCESS
+    marker, or a data file in a partition subdir (a dynamic partition
+    overwrite leaves no marker)."""
+    return (path / "_SUCCESS").exists() or any(path.glob("*=*/part-*"))
+
+
+# the outputs each branch writes after the named step, which a failure of
+# that step leaves unwritten
+_LATER_IN_BRANCH = {"violations": {"csv"}, "verdicts": {"out/verdict_diff"}}
+
+
+@pytest.mark.parametrize("mode", ["full", "incremental"])
+@pytest.mark.parametrize("step", ["violations", "verdicts", "metrics",
+                                  "verdict_diff", "span_kind_hist"])
 def test_a_failed_branch_lets_the_others_finish_and_commits_nothing(
-        spark, main_args, tmp_path, monkeypatch):
-    """One output step raises: main re-raises it only after every other
-    branch has finished, commits nothing to the manifest, and a --resume
-    rerun leaves every sink equal to a clean run's."""
+        spark, failure_runs, monkeypatch, step, mode):
+    """The write of one output lands and then raises: main re-raises it only
+    after every other branch has finished, commits nothing to the manifest,
+    and a --resume rerun leaves every sink equal to a clean run's."""
     import threading
     import time
 
     import run_validation
-    from anomaly_detection_spark import history
-    from anomaly_detection_spark.engine import VERDICTS_SCHEMA
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    prev = str(tmp_path / "prev")
-    spark.createDataFrame([("p0", "not_null:doc_id", False, 3, 10)],
-                          VERDICTS_SCHEMA).write.parquet(prev)
+    root, argv = failure_runs
+    parquet = DataFrameWriter.parquet
 
-    def args(name, *extra):
-        out = tmp_path / name
-        argv = list(main_args)
-        argv[argv.index("--output") + 1] = str(out / "out")
-        argv[argv.index("--manifest") + 1] = str(out / "manifest")
-        return argv + ["--diff-prev", prev, "--emit-histograms",
-                       "--export-csv", str(out / "csv"), *extra]
-
-    assert run_validation.main(args("clean")) == 0
-
-    def injected(cur, prev):
-        raise RuntimeError("injected verdict_diff failure")
+    def failing(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        if path.endswith("/" + step):
+            raise RuntimeError(f"injected failure after writing {step}")
 
     cluster = run_validation.cluster_violations
 
     def slow_cluster(df):
-        time.sleep(2)  # the violations branch ends well after the failure
+        time.sleep(1)  # the violations branch ends after the other branches
         return cluster(df)
 
-    monkeypatch.setattr(history, "verdict_diff", injected)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
     monkeypatch.setattr(run_validation, "cluster_violations", slow_cluster)
     threads = set(threading.enumerate())
-    with pytest.raises(RuntimeError, match="injected verdict_diff failure"):
-        run_validation.main(args("crashed"))
+    name = f"crashed-{step}"
+    with pytest.raises(RuntimeError, match=f"injected failure after writing {step}"):
+        run_validation.main(argv(mode, name))
     assert set(threading.enumerate()) - threads == set()
-    crashed = tmp_path / "crashed"
-    for done in ("out/violations", "out/verdicts", "out/metrics",
-                 "out/span_kind_hist/snapshot=s1", "csv"):
-        assert (crashed / done / "_SUCCESS").exists(), done
+    crashed, clean = root / mode / name, root / mode / "clean"
+    for done in {"out/violations", "out/verdicts", "out/metrics",
+                 "out/verdict_diff", "out/span_kind_hist", "csv"} \
+            - _LATER_IN_BRANCH.get(step, set()):
+        assert _committed(crashed / done), done
     manifest = RuleProgressManifest(spark, str(crashed / "manifest"))
-    assert manifest.read().filter(F.col("snapshot_id") == "s1").count() == 0
+    assert manifest.read().count() == 0
 
     monkeypatch.undo()
-    assert run_validation.main(args("crashed", "--resume")) == 0
-    clean = tmp_path / "clean"
+    assert run_validation.main(argv(mode, name, "--resume")) == 0
     for sink in ("violations", "verdicts", "verdict_diff", "span_kind_hist"):
         assert _rows(spark.read.parquet(str(crashed / "out" / sink))) == \
             _rows(spark.read.parquet(str(clean / "out" / sink))), sink
@@ -286,31 +356,177 @@ def test_a_failed_branch_lets_the_others_finish_and_commits_nothing(
     assert _rows(csv(str(crashed / "csv"))) == _rows(csv(str(clean / "csv")))
 
 
-def test_a_baseline_histogram_under_output_is_read_before_it_is_rewritten(
-        spark, main_args, tmp_path, monkeypatch):
-    """--emit-histograms rewrites {output}/span_kind_hist. When --baseline-hist
-    reads from there, the histograms are written after the grid action, not
-    beside it, so the baseline it reads is still on disk."""
-    import time
+def test_a_partial_resume_writes_a_clean_runs_sinks(spark, snapshot_inputs,
+                                                    failure_runs, tmp_path):
+    """A retry after half of the partitions reached every sink and the
+    manifest leaves the sinks equal to a clean run's. The rules still see
+    the whole snapshot, so a doc_id duplicated across a committed and a
+    pending partition is flagged in the pending one as a clean run flags
+    it."""
+    import run_validation
+
+    clean = failure_runs[0] / "full" / "clean"
+
+    def sink(out, name):
+        return spark.read.parquet(str(out / name))
+
+    done = F.col("partition").isin("p0", "p2", "p4", "p6")
+    dups = sink(clean / "out", "violations").filter(
+        "rule_id = 'unique:doc_id'")
+    split = dups.filter(done).select("doc_id").intersect(
+        dups.filter(~done).select("doc_id"))
+    assert split.count() > 0  # the fixture splits a duplicate across the cut
+
+    out, manifest = tmp_path / "out", str(tmp_path / "manifest")
+    for name in ("violations", "verdicts", "metrics"):
+        sink(clean / "out", name).filter(done).write.parquet(str(out / name))
+    RuleProgressManifest(spark, manifest).commit(
+        sink(clean / "out", "metrics").filter(done))
+    assert run_validation.main(snapshot_inputs["full"] + [
+        "--output", str(out), "--manifest", manifest, "--resume"]) == 0
+
+    stamps = ("committed_at", "duration_ms")
+    for name, drop in (("violations", ()), ("verdicts", ()),
+                       ("metrics", stamps)):
+        assert _rows(sink(out, name), drop) == \
+            _rows(sink(clean / "out", name), drop), name
+    assert _rows(RuleProgressManifest(spark, manifest).read(), stamps) == \
+        _rows(sink(clean / "out", "metrics"), stamps)
+
+
+def test_histograms_are_written_through_spark(spark, snapshot_inputs, docs,
+                                              tmp_path):
+    """--emit-histograms writes through the Spark writer, so a file:// output
+    works: a full scan replaces every snapshot subdir with its own, and an
+    incremental scan replaces only its own, on every retry."""
+    import run_validation
+    from anomaly_detection_spark import drift
+
+    out = tmp_path / "out"
+    hist = out / "span_kind_hist"
+
+    def subdirs():
+        return {name: _rows(spark.read.parquet(str(hist / name)))
+                for name in os.listdir(hist) if name.startswith("snapshot=")}
+
+    def expected(frame):
+        return _rows(drift.span_kind_histogram(frame, "partition"))
+
+    drift.span_kind_histogram(docs, "partition").write.parquet(
+        str(hist / "snapshot=s0"))  # an earlier run's histogram
+    assert run_validation.main(snapshot_inputs["full"] + [
+        "--output", f"file://{out}", "--emit-histograms"]) == 0
+    assert subdirs() == {"snapshot=s1": expected(docs)}
+    appended = expected(docs.filter(~F.col("partition").isin(
+        "p0", "p1", "p2", "p3")))
+    for _ in range(2):
+        assert run_validation.main(snapshot_inputs["incremental"] + [
+            "--output", str(out), "--emit-histograms"]) == 0
+        assert subdirs() == {"snapshot=s1": expected(docs),
+                             "snapshot=s2": appended}
+
+
+def _check_drift_against_own_histogram_store(spark, docs, main_args,
+                                             tmp_path, monkeypatch, order):
+    """Run ``main`` with --emit-histograms and --baseline-hist naming its own
+    {output}/span_kind_hist, which holds a drifted baseline, with the
+    histogram write ordered against the grid action by ``order`` (patched
+    ``ValidationRun.run`` / ``start_branch``). The run's drift verdicts must
+    be those against the baseline as it was when the run started, in the
+    grid, the three grid sinks and the manifest alike."""
+    from collections import Counter
 
     import run_validation
-    from anomaly_detection_spark.engine import ValidationRun
+    from anomaly_detection_spark import drift
 
-    assert run_validation.main(main_args + ["--emit-histograms"]) == 0
-    run = ValidationRun.run
-
-    def late_run(self, *args, **kwargs):
-        time.sleep(3)  # a histogram branch started beside it ends first
-        return run(self, *args, **kwargs)
-
-    monkeypatch.setattr(ValidationRun, "run", late_run)
+    # a baseline with every span of a partition in one kind: PSI flags drift
+    drift.span_kind_histogram(docs, "partition").groupBy("partition").agg(
+        F.min("bin").alias("bin"), F.sum("count").alias("count"),
+    ).write.parquet(str(tmp_path / "out" / "span_kind_hist" / "snapshot=s0"))
+    results = []
+    order(monkeypatch, results)
     assert run_validation.main(main_args + [
-        "--snapshot-id", "s2", "--emit-histograms",
+        "--emit-histograms",
         "--baseline-hist", str(tmp_path / "out" / "span_kind_hist")]) == 0
-    psi = [r["pass"] for r in spark.read.parquet(
-        str(tmp_path / "out" / "verdicts")).filter(
-        "rule_id = 'drift_psi:span_kind'").collect()]
-    assert psi and all(psi)  # the same docs as the baseline: no drift
+
+    cols = ("partition", "rule_id", "violation_count", "rows_scanned")
+    psi = F.col("rule_id") == "drift_psi:span_kind"
+
+    def verdicts(df):
+        return _rows(df.filter(psi).select(*cols))
+
+    grid = Counter(tuple(r[c] for c in cols) for r in results[0].grid
+                   if r["rule_id"] == "drift_psi:span_kind")
+    assert sum(grid.values()) == 8
+    assert any(key[2] for key in grid)  # drift against the stored baseline
+    assert verdicts(spark.read.parquet(str(tmp_path / "out" / "verdicts"))) \
+        == grid
+    assert verdicts(spark.read.parquet(str(tmp_path / "out" / "metrics"))) \
+        == grid
+    assert verdicts(RuleProgressManifest(
+        spark, str(tmp_path / "manifest")).read()) == grid
+    assert spark.read.parquet(str(tmp_path / "out" / "violations")).filter(
+        psi).count() == sum(n * key[2] for key, n in grid.items())
+
+
+def test_a_baseline_histogram_under_output_is_read_before_it_is_rewritten(
+        spark, docs, main_args, tmp_path, monkeypatch):
+    """The histogram write ends before the grid action starts: the baseline
+    files it deleted were read before the write."""
+    import time
+
+    def order(monkeypatch, results):
+        run = ValidationRun.run
+
+        def late_run(self, *args, **kwargs):
+            time.sleep(3)  # a histogram branch started beside it ends first
+            results.append(run(self, *args, **kwargs))
+            return results[-1]
+
+        monkeypatch.setattr(ValidationRun, "run", late_run)
+
+    _check_drift_against_own_histogram_store(
+        spark, docs, main_args, tmp_path, monkeypatch, order)
+
+
+def test_a_histogram_write_after_the_grid_action_keeps_its_drift_verdicts(
+        spark, docs, main_args, tmp_path, monkeypatch):
+    """The histogram write starts once the grid action has cached its
+    frames: the write must not re-cache them against the new histogram."""
+    import threading
+
+    import run_validation
+
+    def order(monkeypatch, results):
+        run, start = ValidationRun.run, run_validation.start_branch
+        grid_done = threading.Event()
+
+        def recorded_run(self, *args, **kwargs):
+            results.append(run(self, *args, **kwargs))
+            grid_done.set()
+            return results[-1]
+
+        monkeypatch.setattr(ValidationRun, "run", recorded_run)
+        monkeypatch.setattr(
+            run_validation, "start_branch", lambda pool, spark, steps: start(
+                pool, spark, [grid_done.wait, *steps]))
+
+    _check_drift_against_own_histogram_store(
+        spark, docs, main_args, tmp_path, monkeypatch, order)
+
+
+def test_a_baseline_histogram_store_without_files_is_an_error(main_args,
+                                                              tmp_path):
+    """An empty --baseline-hist store (a histogram write that never landed)
+    fails the run instead of standing in as an empty baseline."""
+    import run_validation
+
+    store = tmp_path / "hist"
+    store.mkdir()
+    (store / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError, match="no histogram files"):
+        run_validation.main(main_args + ["--baseline-hist", str(store)])
+    assert not (tmp_path / "out").exists()
 
 
 def test_main_runs_its_spark_jobs_in_the_callers_job_group(spark, main_args,

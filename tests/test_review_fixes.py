@@ -103,6 +103,20 @@ def test_append_missing_pairs_idempotent(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3
 
 
+def test_append_missing_pairs_matches_a_null_partition(spark, tmp_path):
+    """A pair whose partition is NULL is held by the sink like any other:
+    a retry does not append its rows again."""
+    from run_validation import append_missing_pairs
+
+    path = str(tmp_path / "violations")
+    df = spark.createDataFrame(
+        [(None, "rA", "d1"), (None, "rA", "d2"), ("p0", "rA", "d3")],
+        "partition string, rule_id string, doc_id string")
+    append_missing_pairs(spark, df, path)
+    append_missing_pairs(spark, df, path)
+    assert spark.read.parquet(path).count() == 3
+
+
 def test_append_missing_pairs_creates_sink(spark, tmp_path):
     from run_validation import append_missing_pairs
 

@@ -216,9 +216,7 @@ def test_violations_sink_is_one_file_sorted_by_pair(spark, cli_inputs,
         want = Counter(r for rows in by_pair.values() for r in rows[:2])
     elif how == "resume":
         # a retry after p0..p2 reached every sink and the manifest: the run
-        # appends the other pairs through append_missing_pairs. (A resume
-        # rescans only pending partitions; the fixture's duplicated doc_ids
-        # sit in p6 and p7, so this split keeps both sides of each.)
+        # appends the other pairs through append_missing_pairs
         out, manifest = str(tmp_path / "out"), str(tmp_path / "manifest")
         done = F.col("partition").isin("p0", "p1", "p2")
         for name in ("violations", "verdicts", "metrics"):
