@@ -57,13 +57,22 @@ def numeric_histogram(
 
 
 def _normalized_join(cur: DataFrame, base: DataFrame) -> DataFrame:
-    """Full-outer join of two histograms on (partition, bin) with per-partition
-    normalized probabilities p (current) and q (baseline); missing bins get 0."""
-    c = cur.select("partition", "bin", F.col("count").alias("c_cnt"))
-    b = base.select("partition", "bin", F.col("count").alias("b_cnt"))
-    joined = c.join(b, ["partition", "bin"], "full_outer").fillna(
-        {"c_cnt": 0, "b_cnt": 0}
-    )
+    """Two histograms merged on (partition, bin), NULL matching NULL, with
+    per-partition normalized probabilities p (current) and q (baseline);
+    missing bins get 0.
+
+    A union grouped by (partition, bin) after one shuffle by partition,
+    not a full outer join: grouping meets NULL keys without the extra
+    shuffle of each side that null-safe join keys cost, and the window
+    below reuses that shuffle."""
+    zero = F.lit(0).cast("long")
+    c = cur.select("partition", "bin", F.col("count").alias("c_cnt"),
+                   zero.alias("b_cnt"))
+    b = base.select("partition", "bin", zero.alias("c_cnt"),
+                    F.col("count").alias("b_cnt"))
+    joined = c.unionByName(b).repartition("partition").groupBy(
+        "partition", "bin").agg(F.sum("c_cnt").alias("c_cnt"),
+                                F.sum("b_cnt").alias("b_cnt"))
     w = Window.partitionBy("partition")
     return joined.select(
         "partition",

@@ -21,9 +21,9 @@ and ``verdicts``/``metrics`` read the cached result — sinks, the manifest
 commit, the failing-pair count and the report never re-run the rule
 topology.
 
-A resume takes the same path over the whole snapshot and leaves the pairs
-already committed out of all three outputs, so every pending pair gets a
-clean run's answer.
+The snapshot is the unit of commit. A resume of a committed snapshot takes
+the same path with both plans folded to empty relations, so no rule runs; a
+snapshot not yet committed is evaluated in full.
 """
 
 from __future__ import annotations
@@ -35,12 +35,12 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.manifest import join_pairs
 from anomaly_detection_spark.rules.core import (
     VIOLATION_COLUMNS,
     RowRule,
     RuleContext,
     RuleSet,
+    join_on_keys,
 )
 
 # DDL of the violations and verdicts sinks (the metrics sink is the
@@ -62,8 +62,8 @@ def cap_violations(violations: DataFrame, max_per_pair: int,
     table the size of the corpus; verdict counts must stay EXACT (they come
     from the full frame), but the *persisted* violation rows only need to be
     representative. Selection is a pure function of row content — no
-    ``rand()``, no layout dependence — so resumed/re-run increments pick the
-    same exemplars.
+    ``rand()``, no layout dependence — so a re-run picks the same
+    exemplars.
 
     Skew-safe two-phase top-k: a hot (partition, rule_id) pair — one rule
     failing on 10^9 docs — would put all its rows in a single window task.
@@ -298,7 +298,7 @@ class ValidationResult:
     violations: DataFrame
     metrics: DataFrame
     #: the rows of ``verdicts``, collected by the action that built it;
-    #: empty when a resume finds every pair of the snapshot committed
+    #: empty when a resume finds the snapshot committed
     grid: list[Row]
 
 
@@ -382,10 +382,10 @@ class ValidationRun:
         input, so caching them is bounded by the defect rate, not the
         snapshot size.
 
-        With a ``manifest`` and ``resume=True`` the rules still see the
-        whole snapshot (a doc_id duplicated across a committed and a pending
-        partition is still flagged), and the same action leaves the pairs
-        committed for ``snapshot_id`` out of the grid and the violations.
+        With a ``manifest`` and ``resume=True``, a ``snapshot_id`` the
+        manifest holds is complete: the grid and the violations are empty
+        relations, so the grid action runs no rule. Any other snapshot is
+        evaluated in full.
 
         ``commit_manifest=False`` skips the internal manifest commit so the
         caller can write its sinks FIRST and commit afterwards (the resume
@@ -407,10 +407,10 @@ class ValidationRun:
             )
 
         grid = self._with_rules(parts)
-        if self.manifest is not None and resume:
-            done = self.manifest.completed_pairs(self.snapshot_id)
-            grid = join_pairs(grid, done, "left_anti")
-            violations = join_pairs(violations, done, "left_anti")
+        if self.manifest is not None and resume \
+                and self.manifest.committed(self.snapshot_id):
+            # the optimizer folds both plans into empty local relations
+            grid, violations = grid.limit(0), violations.limit(0)
 
         if persist:
             violations = violations.persist()
@@ -421,7 +421,7 @@ class ValidationRun:
         # sink one file; cached JVM-side, so no consumer re-runs the rules
         # or starts Python workers
         verdicts = (
-            join_pairs(grid, counts, "left")
+            join_on_keys(grid, counts, ["partition", "rule_id"], "left")
             .select(
                 "partition",
                 "rule_id",

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from anomaly_detection_spark.rules.core import join_on_keys
+
 
 def prune_history(metrics: DataFrame, max_age_days: int = 180,
                   now=None) -> DataFrame:
@@ -106,7 +108,7 @@ def verdict_diff(cur: DataFrame, prev: DataFrame) -> DataFrame:
     the reference's history tracker answers ("what broke since last run?",
     ``risk_history_tracker.py:103-131`` score-change detection), recast as
     one full-outer join of two (partition, rule_id, pass, violation_count)
-    grids.
+    grids, a NULL partition matching itself.
 
     Status per pair: ``new_failure`` (pass→fail or newly planned and
     failing), ``resolved`` (fail→pass), ``still_failing``,
@@ -128,7 +130,7 @@ def verdict_diff(cur: DataFrame, prev: DataFrame) -> DataFrame:
         F.col("pass").alias("_pp"),
         F.col("violation_count").alias("_pv"),
     )
-    j = c.join(p, ["partition", "rule_id"], "full_outer")
+    j = join_on_keys(c, p, ["partition", "rule_id"], "full_outer")
     cur_fail = F.coalesce(~F.col("_cp"), F.lit(False))   # absent ⇒ not failing
     prev_fail = F.coalesce(~F.col("_pp"), F.lit(False))
     status = (

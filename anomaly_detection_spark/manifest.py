@@ -1,5 +1,6 @@
-"""Rule-progress manifest: an append-only commit log of completed
-(partition, rule_id, snapshot_id) work with per-partition lineage + metrics.
+"""Rule-progress manifest: an append-only commit log of finished snapshots,
+one metrics row per (partition, rule_id) of each, with per-partition lineage
++ metrics.
 
 ≈ the reference's JSON risk-history checkpoint
 (``/root/reference/anomaly_detection/.../risk_history_tracker.py:35-101``)
@@ -8,9 +9,10 @@ fileset (Iceberg/Delta would make this a real atomic snapshot commit; the
 parquet fallback appends a uniquely-named subdirectory, which is atomic
 enough for single-writer runs and keeps the sandbox dependency-free).
 
-Resume semantics: a resumed run evaluates the whole snapshot and leaves the
-pairs ``completed_pairs`` returns out of its outputs (``join_pairs``): a
-clean run's outputs minus the pairs earlier attempts committed.
+Resume semantics: the snapshot is the unit of commit. Any committed row of
+a snapshot means the whole snapshot is committed (``committed``), and a
+resumed run of it evaluates nothing; a snapshot without one is run again
+in full.
 """
 
 from __future__ import annotations
@@ -53,21 +55,7 @@ class RuleProgressManifest:
         commit_dir = os.path.join(self.path, f"commit-{uuid.uuid4().hex[:12]}")
         metrics.write.mode("overwrite").parquet(commit_dir)
 
-    def completed_pairs(self, snapshot_id: str) -> DataFrame:
-        return (
-            self.read()
-            .filter(F.col("snapshot_id") == snapshot_id)
-            .select("partition", "rule_id")
-            .distinct()
-        )
-
-
-def join_pairs(df: DataFrame, other: DataFrame, how: str) -> DataFrame:
-    """``df`` joined ``how`` to ``other`` on (partition, rule_id), keeping
-    ``df``'s key columns. A NULL partition matches a NULL partition: it is a
-    partition of the grid like any other."""
-    other = other.withColumnRenamed("partition", "_p") \
-        .withColumnRenamed("rule_id", "_r")
-    on = F.col("partition").eqNullSafe(F.col("_p")) \
-        & (F.col("rule_id") == F.col("_r"))
-    return df.join(other, on, how).drop("_p", "_r")
+    def committed(self, snapshot_id: str) -> bool:
+        """Whether any commit holds ``snapshot_id``: one Spark job."""
+        return self.read().filter(
+            F.col("snapshot_id") == snapshot_id).limit(1).count() > 0

@@ -21,7 +21,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.rules.core import DatasetRule, RowRule, RuleContext
+from anomaly_detection_spark.rules.core import (
+    DatasetRule, RowRule, RuleContext, join_on_keys)
 from anomaly_detection_spark.functions.text import encoding_anomaly_count
 
 
@@ -1021,8 +1022,9 @@ def row_count_drift(base_docs: DataFrame, max_rel_delta: float = 0.5,
     """Per-partition volume check vs a baseline snapshot: a partition whose
     row count moved more than ``max_rel_delta`` relative to baseline — or
     that appeared/disappeared entirely — fails. Two count-aggs (map-side
-    combined) + a full outer join on the tiny per-partition count tables;
-    cost is independent of snapshot width."""
+    combined) + a full outer join on the tiny per-partition count tables, a
+    NULL partition matching its own baseline; cost is independent of
+    snapshot width."""
 
     def build(docs: DataFrame, ctx: RuleContext) -> DataFrame:
         p = ctx.partition_col
@@ -1030,7 +1032,7 @@ def row_count_drift(base_docs: DataFrame, max_rel_delta: float = 0.5,
         base = base_docs.groupBy(F.col(p).alias("partition")).agg(
             F.count("*").alias("n_base")
         )
-        j = cur.join(base, "partition", "full_outer")
+        j = join_on_keys(cur, base, ["partition"], "full_outer")
         nc = F.coalesce(F.col("n_cur"), F.lit(0))
         nb = F.coalesce(F.col("n_base"), F.lit(0))
         # violated when |cur-base| > max_rel_delta * base, or base empty

@@ -17,11 +17,32 @@ DataFrame with the canonical schema
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 VIOLATION_COLUMNS = ["partition", "rule_id", "doc_id", "detail"]
+
+
+def join_on_keys(df: DataFrame, other: DataFrame, keys: list[str],
+                 how: str) -> DataFrame:
+    """``df`` joined ``how`` (inner, left or full_outer) to ``other`` on the
+    columns ``keys``, which both frames hold; their other columns must
+    differ. NULL matches NULL: a NULL partition is a partition like any
+    other. The result holds each key once, taken from whichever side has the
+    row, then ``df``'s other columns, then ``other``'s."""
+    alias = {k: f"_key{i}" for i, k in enumerate(keys)}
+    rest = [c for c in other.columns if c not in alias]
+    on = reduce(lambda a, b: a & b,
+                [F.col(k).eqNullSafe(F.col(a)) for k, a in alias.items()])
+    joined = df.join(
+        other.select(*[F.col(k).alias(a) for k, a in alias.items()], *rest),
+        on, how)
+    return joined.select(
+        *[F.coalesce(k, a).alias(k) for k, a in alias.items()],
+        *[c for c in df.columns if c not in alias], *rest)
 
 
 @dataclass(frozen=True)

@@ -12,9 +12,10 @@ Cluster deployment (north-rule shape):
         --snapshot-id s42 [--resume]
 
 Reads the snapshot, runs the full fused rule suite (+ uniqueness +
-referential + span-sequence check), writes three parquet outputs
-(verdicts/, violations/, metrics/) and commits the (partition, rule_id)
-progress manifest last — so an interrupted run re-evaluates, never skips.
+referential + span-sequence check), overwrites three parquet outputs
+(verdicts/, violations/, metrics/) and commits the snapshot to the progress
+manifest last — so an interrupted run is run again in full, never skipped,
+and a --resume of a committed snapshot evaluates nothing.
 The same script runs unchanged at any parallelism; local smoke:
 
     spark-submit --master 'local[4]' --py-files engine.zip run_validation.py ...
@@ -38,8 +39,9 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                     help="previous-snapshot documents path; enables PSI/KS/quantile drift rules")
     ap.add_argument("--snapshot-id", default="s0")
     ap.add_argument("--resume", action="store_true",
-                    help="leave the (partition, rule_id) pairs already "
-                         "committed for this snapshot out of the outputs")
+                    help="skip a snapshot the manifest has committed: no "
+                         "rule runs and the sinks stay as they are (an "
+                         "uncommitted snapshot is run again in full)")
     ap.add_argument("--format", default="parquet",
                     choices=["parquet", "iceberg", "snaplog"],
                     help="input format: plain parquet path, Iceberg table "
@@ -52,9 +54,9 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     ap.add_argument("--incremental-from", default=None,
                     help="incremental read: validate only rows APPENDED "
                          "after this snapshot id (up to --iceberg-snapshot-id if "
-                         "given) — the per-snapshot revalidation shape; composes "
-                         "with the manifest, which already skips committed "
-                         "(partition, rule) pairs (iceberg/snaplog)")
+                         "given) — the per-snapshot revalidation shape; the "
+                         "manifest commits it under --snapshot-id "
+                         "(iceberg/snaplog)")
     ap.add_argument("--baseline-snapshot-id", default=None,
                     help="pin the --baseline read to a snapshot (iceberg/"
                          "snaplog); the natural drift baseline is an earlier "
@@ -191,40 +193,6 @@ def cluster_violations(violations):
         .sortWithinPartitions("partition", "rule_id", "doc_id", "detail")
 
 
-def append_missing_pairs(spark, df, path: str, layout=lambda d: d) -> None:
-    """Append ``df`` to the parquet sink at ``path``, skipping rows whose
-    (partition, rule_id) the sink ALREADY holds — the idempotent half of the
-    data-first/manifest-last resume contract. A crash between sink writes
-    and the manifest commit leaves pairs pending; the retry recomputes them,
-    and without this filter would append their rows a second time (some
-    sinks, not others, depending on where the crash landed). Exactly-once
-    per pair holds as long as each parquet job commit is atomic; a torn job
-    commit (partial pair) needs a transactional (Iceberg/Delta) sink, where
-    the whole run is one atomic commit instead. A NULL partition is held like
-    any other (``manifest.join_pairs``).
-
-    ``layout`` is applied to the rows left after that filter, so the
-    appended files are laid out as an overwrite would lay them out (see
-    ``cluster_violations``); a join placed after it would reshuffle them."""
-    from pyspark.errors import AnalysisException
-
-    from anomaly_detection_spark.manifest import join_pairs
-
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException as exc:
-        # first increment: sink doesn't exist yet. ONLY this narrow case may
-        # skip the dedup — any other error (listing failure, corrupt footer,
-        # a sink without the key columns) must propagate, or the retry would
-        # silently double-append.
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
-    else:
-        df = join_pairs(df, existing.select("partition", "rule_id"),
-                        "left_anti")
-    layout(df).write.mode("append").parquet(path)
-
-
 def start_branch(pool, spark, steps) -> Future:
     """Submit ``steps`` to ``pool`` to run in order on one thread. The
     thread takes the caller's Spark job group, local properties and tags,
@@ -236,6 +204,20 @@ def start_branch(pool, spark, steps) -> Future:
             step()
 
     return pool.submit(inheritable_thread_target(spark)(branch))
+
+
+def read_checkpoint(spark, path: str, schema: str, what: str):
+    """The parquet files under ``path``, read with the DDL ``schema`` into an
+    eager ``localCheckpoint``. No plan of the run reads those files again,
+    so an output that rewrites them (the verdicts sink may be its own
+    --diff-prev, the histogram store its own --baseline-hist) neither loses
+    the rows nor re-caches a cached plan that reads them (a write re-caches
+    every plan that reads its path). With a schema, a directory without
+    files would read as empty: it raises FileNotFoundError instead."""
+    df = spark.read.schema(schema).parquet(path)
+    if not df.inputFiles():
+        raise FileNotFoundError(f"{path}: no {what} files")
+    return df.localCheckpoint()
 
 
 def release_checkpoint(df) -> None:
@@ -296,19 +278,11 @@ def main(argv: list[str] | None = None) -> int:
         rules.add(builtin.row_count_drift(base_docs, max_rel_delta=args.max_row_delta))
     elif args.baseline_hist:
         # drift without touching baseline DATA: the stored histogram is the
-        # whole baseline state the PSI check needs. It is metadata-sized and
-        # read into a checkpoint here (with its DDL: the checkpoint's job
-        # takes the place of a schema-inference job), so no plan of this run
-        # reads its files: the histogram write may rewrite them, and a write
-        # re-caches every cached plan that reads its path, from the new files.
+        # whole baseline state the PSI check needs (metadata-sized)
         from anomaly_detection_spark.drift import SPAN_KIND_HIST_SCHEMA
 
-        base_hist = spark.read.schema(SPAN_KIND_HIST_SCHEMA).parquet(
-            args.baseline_hist)
-        if not base_hist.inputFiles():
-            raise FileNotFoundError(
-                f"--baseline-hist {args.baseline_hist}: no histogram files")
-        base_hist = base_hist.localCheckpoint()
+        base_hist = read_checkpoint(spark, args.baseline_hist,
+                                    SPAN_KIND_HIST_SCHEMA, "histogram")
         rules.add(builtin.psi_drift_from_hist(base_hist))
     if args.expect_schema:
         import json as _json
@@ -327,16 +301,11 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     # The write_* steps below run on the output branches of the write-order
-    # block at the end of main; ``result``, ``pending`` and ``append`` are
-    # bound there before any branch starts.
+    # block at the end of main; ``result`` and ``pending`` are bound there
+    # before any branch starts.
     def write_sink(name, df) -> None:
         # the grid sinks are one cached partition already
-        layout = cluster_violations if name == "violations" else (lambda d: d)
-        if append:
-            append_missing_pairs(spark, df, f"{args.output}/{name}",
-                                 layout=layout)
-        else:
-            layout(df).write.mode("overwrite").parquet(f"{args.output}/{name}")
+        df.write.mode("overwrite").parquet(f"{args.output}/{name}")
 
     def write_violations() -> None:
         # Sink policy, not engine semantics: verdict/metric counts were
@@ -349,7 +318,7 @@ def main(argv: list[str] | None = None) -> int:
 
             sink_violations = cap_violations(
                 result.violations, args.max_violations_per_pair)
-        write_sink("violations", sink_violations)
+        write_sink("violations", cluster_violations(sink_violations))
 
     def read_violations():
         """The FULL violations sink, read with its known schema."""
@@ -357,22 +326,20 @@ def main(argv: list[str] | None = None) -> int:
             f"{args.output}/violations")
 
     def export_csv() -> None:
-        # S5: CSV export is a projection of the (pair-deduped) parquet sink,
-        # not a second independent append — so a crash-retried increment
-        # can never double-write rows into the CSV either
+        # S5: CSV export is a projection of the parquet sink, so it holds
+        # what the sink holds, on a resume of a committed snapshot too
         read_violations().write.mode("overwrite").option(
             "header", True).csv(args.export_csv)
 
     def write_verdicts() -> None:
         """The verdicts sink, then the diff against --diff-prev. That
         directory may be this sink's own, so it is checkpointed before the
-        overwrite (``persist`` would not hold it: overwriting a path
-        re-caches every cached plan that reads the path, from the new
-        files) and released however the branch ends."""
+        overwrite and released however the branch ends."""
         prev = None
         try:
             if args.diff_prev:
-                prev = spark.read.parquet(args.diff_prev).localCheckpoint()
+                prev = read_checkpoint(spark, args.diff_prev,
+                                       VERDICTS_SCHEMA, "verdicts")
             if pending:
                 write_sink("verdicts", result.verdicts)
             if prev is not None:
@@ -382,10 +349,9 @@ def main(argv: list[str] | None = None) -> int:
                 release_checkpoint(prev)
 
     def write_verdict_diff(prev) -> None:
-        """Diff the FULL current verdict sink (not just this run's pending
-        increment — a resumed increment would falsely mark every
-        already-committed failing pair 'resolved') against ``prev``, the
-        materialized --diff-prev verdicts."""
+        """Diff the current verdict sink (on a resume of a committed
+        snapshot, the committed run's: this run wrote none) against
+        ``prev``, the materialized --diff-prev verdicts."""
         from anomaly_detection_spark.history import verdict_diff
 
         cur = spark.read.schema(VERDICTS_SCHEMA).parquet(
@@ -418,9 +384,8 @@ def main(argv: list[str] | None = None) -> int:
         ).parquet(f"{args.output}/span_kind_hist")
 
     def write_quarantine() -> None:
-        """Route the INPUT corpus by verdict from the FULL violations sink
-        (a resumed increment must quarantine on the complete picture):
-        distinct non-null violating doc_ids in one left join (AQE
+        """Route the INPUT corpus by verdict from the violations sink (on a
+        resume of a committed snapshot, the committed run's): distinct non-null violating doc_ids in one left join (AQE
         broadcast-converts when small), plus docs with NULL doc_id — they
         can never be matched to a violation row, and an untrackable doc
         must not ship to training via route=clean."""
@@ -442,10 +407,9 @@ def main(argv: list[str] | None = None) -> int:
             "route").parquet(args.quarantine)
 
     def write_cooccurrence() -> None:
-        """Rule co-occurrence meta-analytics over the FULL violations sink
-        (not just this run's increment — a resumed run must measure overlap
-        on the complete picture): per rule pair, distinct-doc overlap and
-        exact integer-ppm Jaccard. Self-join fan-out is bounded by the
+        """Rule co-occurrence meta-analytics over the violations sink (on a
+        resume of a committed snapshot, the committed run's): per rule
+        pair, distinct-doc overlap and exact integer-ppm Jaccard. Self-join fan-out is bounded by the
         suite size, never by the corpus."""
         from anomaly_detection_spark.engine import rule_cooccurrence
 
@@ -453,9 +417,9 @@ def main(argv: list[str] | None = None) -> int:
             f"{args.output}/rule_cooccurrence")
 
     def write_slices() -> None:
-        """Slice-lift localization over the FULL violations sink (resume-
-        safe: the complete picture, not this run's increment) against the
-        input corpus, over the user-named dimension columns."""
+        """Slice-lift localization over the violations sink (on a resume of
+        a committed snapshot, the committed run's) against the input corpus,
+        over the user-named dimension columns."""
         from anomaly_detection_spark.engine import violation_slices
 
         dims = [c.strip() for c in args.slice_dims.split(",") if c.strip()]
@@ -543,8 +507,11 @@ def main(argv: list[str] | None = None) -> int:
                 spark.stop()
             return 0
 
-    # Write order is the resume contract: data first, manifest last — a crash
-    # between the sink writes and the commit re-evaluates, never skips.
+    # Write order is the resume contract: data first, manifest last. The
+    # commit is the run's one atomic point: a crash before it leaves the
+    # snapshot uncommitted, and the retry runs it in full and overwrites
+    # every sink, a torn one included; a --resume of a committed snapshot
+    # writes no sink (``pending`` is false) and commits nothing.
     # The outputs are written by up to four concurrent branches, each a
     # sequence of steps on one driver thread; no branch reads another's
     # output, and the manifest is committed only after every branch has
@@ -558,17 +525,9 @@ def main(argv: list[str] | None = None) -> int:
     # - verdicts: the sink, then the --diff-prev verdict diff;
     # - metrics: the sink.
     # Each branch thread inherits the caller's Spark job group and tags.
-    # Mode: a resumed run with prior commits outputs only the pairs not yet
-    # committed and appends them (none when all are: the sinks and the
-    # manifest stay as they are); a fresh run overwrites. Appends are
-    # IDEMPOTENT per (partition, rule_id): a crash after some sink writes
-    # but before the manifest commit leaves those pairs pending, and the
-    # retry must not append their rows a second time — each sink drops
-    # pairs it already holds (see append_missing_pairs).
-    # With Iceberg/Delta sinks all of this becomes one atomic commit.
     # The violations sink is laid out where it meets the writer, after the
-    # cap and after the resume filter: its file count follows bytes, not the
-    # partitions of the rule branches that produced it (cluster_violations).
+    # cap: its file count follows bytes, not the partitions of the rule
+    # branches that produced it (cluster_violations).
     input_steps = [step for flag, step in (
         (args.emit_histograms, write_histograms),
         (args.fingerprint_cols, write_fingerprints),
@@ -580,10 +539,7 @@ def main(argv: list[str] | None = None) -> int:
             if input_steps:
                 branches.append(start_branch(pool, spark, input_steps))
             result = run.run(resume=args.resume, commit_manifest=False)
-            append = args.resume and manifest is not None and (
-                manifest.completed_pairs(args.snapshot_id).limit(1).count() > 0)
-            # an empty grid appends nothing: the sinks stay as they are
-            pending = bool(result.grid) or not append
+            pending = bool(result.grid) or not args.resume
 
             violation_steps = [step for flag, step in (
                 (pending, write_violations),

@@ -67,6 +67,29 @@ def test_drift_flags_only_drifted_partition(snapshots):
     assert psi_parts == {f"p{N_PARTS - 1}"}
 
 
+_DOCS_DDL = ("doc_id string, partition string, spans array<struct<kind:string,"
+             "text:string,media_ref:string,offset:int>>")
+
+
+def test_a_null_partition_meets_its_own_baseline(spark):
+    """A NULL partition is a partition like any other: against an identical
+    baseline its PSI and KS are 0, and the drift rules flag nothing."""
+    from anomaly_detection_spark.rules import builtin
+    from anomaly_detection_spark.rules.core import RuleContext
+
+    d = spark.createDataFrame([
+        ("d1", None, [("text", "a", None, 0)]),
+        ("d2", "p0", [("image", None, "m1", 0)]),
+    ], _DOCS_DDL)
+    hist = drift.span_kind_histogram(d)
+    assert {r["partition"]: r["psi"] for r in drift.psi(hist, hist).collect()} \
+        == {None: 0.0, "p0": 0.0}
+    assert {r["partition"]: r["ks"]
+            for r in drift.ks_statistic(hist, hist).collect()} \
+        == {None: 0.0, "p0": 0.0}
+    assert builtin.psi_drift(d).build(d, RuleContext()).count() == 0
+
+
 def test_ks_matches_numpy_oracle(snapshots):
     cur, base = snapshots
     got = {r["partition"]: r["ks"] for r in drift.ks_statistic(

@@ -98,3 +98,17 @@ def test_verdict_diff_statuses(spark):
         ("p1", "rD"): ("unplanned", 0),
         ("p2", "rA"): ("new_failure", 3),
     }
+
+
+def test_verdict_diff_matches_a_null_partition_to_itself(spark):
+    """A failing pair of the NULL partition, diffed against itself, is
+    still failing: NULL meets NULL in the diff's join."""
+    from anomaly_detection_spark.history import verdict_diff
+
+    v = spark.createDataFrame(
+        [(None, "r", False, 1, 2), ("p0", "r", True, 0, 1)],
+        "partition string, rule_id string, pass boolean, "
+        "violation_count long, rows_scanned long")
+    got = sorted(((r["partition"] or ""), r["status"], r["violation_delta"])
+                 for r in verdict_diff(v, v).collect())
+    assert got == [("", "still_failing", 0), ("p0", "still_passing", 0)]

@@ -1,6 +1,7 @@
-"""Resumability: completed (partition, rule_id) pairs are never re-evaluated;
-a partially-committed run completes exactly the remaining work (SURVEY.md §5
-test plan item 3)."""
+"""Resumability: the snapshot is the unit of commit. A resume of a committed
+snapshot evaluates nothing; a snapshot that no commit holds is run again in
+full, whatever a crashed attempt left in its sinks (SURVEY.md §5 test plan
+item 3)."""
 
 from __future__ import annotations
 
@@ -24,46 +25,40 @@ def _rules():
     return RuleSet(row_rules=[builtin.not_null("doc_id"), builtin.non_empty_array("spans")])
 
 
+def _leaves(df):
+    """The leaf nodes of the plan that computes ``df``: for a cached frame,
+    the plan it caches."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() == "InMemoryRelation":
+        plan = plan.cachedPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).toString() for i in range(leaves.size())]
+
+
+def _runs_no_rule(result):
+    """Whether the verdicts and violations of ``result`` are computed from
+    empty local relations only: the grid action scanned no input."""
+    leaves = _leaves(result.verdicts) + _leaves(result.violations)
+    return bool(leaves) and all(
+        leaf.startswith("LocalTableScan <empty>") for leaf in leaves)
+
+
 def test_full_run_then_noop(spark, docs, manifest):
     r1 = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s1").run()
     n1 = r1.verdicts.count()
     assert n1 == 8 * 2  # 8 partitions x 2 rules
+    assert not _runs_no_rule(r1)
     commits = os.listdir(manifest.path)
     r2 = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s1").run()
     assert r2.verdicts.count() == 0
     assert r2.grid == []
+    # a committed snapshot is complete: its plans fold to empty relations
+    assert _runs_no_rule(r2)
     # nothing left to evaluate: nothing is committed, not even an empty set
     assert os.listdir(manifest.path) == commits
     # a new snapshot is fresh work
     r3 = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s2").run()
     assert r3.verdicts.count() == n1
-
-
-def test_partial_commit_resume(spark, docs, manifest):
-    """Simulate a crash after only 3 partitions' worth of work committed:
-    pre-commit a fabricated manifest slice, then resume and check the run
-    evaluates exactly the complement."""
-    full = ValidationRun(spark, docs, _rules(), snapshot_id="s1").run(resume=False)
-    done = full.metrics.filter(F.col("partition").isin("p0", "p1", "p2"))
-    manifest.commit(done)
-
-    resumed = ValidationRun(spark, docs, _rules(), manifest=manifest, snapshot_id="s1").run()
-    got_pairs = {
-        (r["partition"], r["rule_id"]) for r in resumed.verdicts.collect()
-    }
-    expected_pairs = {
-        (f"p{i}", rid)
-        for i in range(3, 8)
-        for rid in ("not_null:doc_id", "non_empty:spans")
-    }
-    assert got_pairs == expected_pairs
-    # resumed verdicts agree with the full run on the resumed slice
-    full_map = {
-        (r["partition"], r["rule_id"]): (r["pass"], r["violation_count"])
-        for r in full.verdicts.collect()
-    }
-    for r in resumed.verdicts.collect():
-        assert full_map[(r["partition"], r["rule_id"])] == (r["pass"], r["violation_count"])
 
 
 def test_manifest_read_propagates_errors_other_than_absent_path(spark):
@@ -134,6 +129,29 @@ def test_metrics_sink_and_manifest_share_committed_at(spark, main_args,
     assert sink == committed
 
 
+def test_main_resume_of_a_committed_snapshot_runs_no_rule(spark, main_args,
+                                                         monkeypatch):
+    """A --resume of a snapshot main has committed evaluates nothing: the
+    grid action's plans are empty relations, and the run commits nothing."""
+    import run_validation
+
+    assert run_validation.main(main_args) == 0
+    manifest = RuleProgressManifest(
+        spark, main_args[main_args.index("--manifest") + 1])
+    commits = os.listdir(manifest.path)
+    run, noop = ValidationRun.run, []
+
+    def recorded(self, *args, **kwargs):
+        result = run(self, *args, **kwargs)
+        noop.append(_runs_no_rule(result))  # before main releases the caches
+        return result
+
+    monkeypatch.setattr(ValidationRun, "run", recorded)
+    assert run_validation.main(main_args + ["--resume"]) == 0
+    assert noop == [True]
+    assert os.listdir(manifest.path) == commits
+
+
 def test_main_releases_its_caches(spark, main_args):
     """main unpersists the violations and the verdict grid it cached: no
     RDD it persisted is still registered when it returns. (Compared by id,
@@ -200,7 +218,8 @@ def test_main_reads_its_own_sinks_back_with_their_schema(spark, main_args,
     """Every read-back of a sink this run wrote under --output (the verdicts
     for the diff, the diff for the report, the violations for the CSV
     export, quarantine, co-occurrence and slices) carries the sink's schema,
-    so no read starts a schema-inference job."""
+    and so does the --diff-prev read, so no read starts a schema-inference
+    job."""
     import run_validation
     from pyspark.sql.readwriter import DataFrameReader
 
@@ -233,6 +252,21 @@ def test_main_reads_its_own_sinks_back_with_their_schema(spark, main_args,
     assert sorted(p for p, _ in own) == ["verdict_diff", "verdicts"] + [
         "violations"] * 4
     assert all(has for _, has in own), own
+    assert [(p, has) for p, has in reads if p == prev] == [(prev, True)]
+
+
+def test_a_diff_prev_without_files_is_an_error(main_args, tmp_path):
+    """A --diff-prev directory that holds no verdict files (a write that
+    never landed) fails the run instead of reading as an empty grid, which
+    would mark every failing pair a new failure."""
+    import run_validation
+
+    prev = tmp_path / "prev"
+    prev.mkdir()
+    (prev / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError, match="no verdicts files"):
+        run_validation.main(main_args + ["--diff-prev", str(prev)])
+    assert not (tmp_path / "manifest").exists()  # nothing committed
 
 
 @pytest.fixture(scope="module")
@@ -294,19 +328,35 @@ def _committed(path):
     return (path / "_SUCCESS").exists() or any(path.glob("*=*/part-*"))
 
 
-# the outputs each branch writes after the named step, which a failure of
-# that step leaves unwritten
-_LATER_IN_BRANCH = {"violations": {"csv"}, "verdicts": {"out/verdict_diff"}}
+# the outputs a failure of the named step leaves uncommitted: its own torn
+# write, and what its branch writes after it
+_LATER_IN_BRANCH = {"violations": {"csv"}, "verdicts": {"out/verdict_diff"},
+                    "torn_violations": {"out/violations", "csv"}}
+
+
+def _files(root):
+    """Every file of the three sinks and the manifest under ``root``, with
+    its mtime."""
+    return {os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for top in ("out/violations", "out/verdicts", "out/metrics",
+                        "manifest")
+            for d, _, fs in os.walk(root / top) for f in fs}
 
 
 @pytest.mark.parametrize("mode", ["full", "incremental"])
 @pytest.mark.parametrize("step", ["violations", "verdicts", "metrics",
-                                  "verdict_diff", "span_kind_hist"])
+                                  "verdict_diff", "span_kind_hist",
+                                  "torn_violations", "manifest"])
 def test_a_failed_branch_lets_the_others_finish_and_commits_nothing(
         spark, failure_runs, monkeypatch, step, mode):
     """The write of one output lands and then raises: main re-raises it only
     after every other branch has finished, commits nothing to the manifest,
-    and a --resume rerun leaves every sink equal to a clean run's."""
+    and a --resume rerun, which runs the snapshot again in full, leaves
+    every sink equal to a clean run's. So does a violations write torn
+    inside its job commit (part files of some pairs land, _SUCCESS does
+    not). A raise after the manifest commit has landed leaves the snapshot
+    committed: the --resume is then a no-op that leaves every sink and
+    manifest file as it is."""
     import threading
     import time
 
@@ -317,8 +367,15 @@ def test_a_failed_branch_lets_the_others_finish_and_commits_nothing(
     parquet = DataFrameWriter.parquet
 
     def failing(self, path, *args, **kwargs):
+        if step == "torn_violations" and path.endswith("/violations"):
+            parquet(self._df.filter(F.col("partition").isin(
+                "p0", "p1", "p4", "p5")).write.mode("overwrite"), path)
+            os.remove(os.path.join(path, "_SUCCESS"))
+            raise RuntimeError(f"injected failure after writing {step}")
         parquet(self, path, *args, **kwargs)
-        if path.endswith("/" + step):
+        written = "manifest" if "/manifest/commit-" in path \
+            else path.rsplit("/", 1)[-1]
+        if written == step:
             raise RuntimeError(f"injected failure after writing {step}")
 
     cluster = run_validation.cluster_violations
@@ -339,11 +396,16 @@ def test_a_failed_branch_lets_the_others_finish_and_commits_nothing(
                  "out/verdict_diff", "out/span_kind_hist", "csv"} \
             - _LATER_IN_BRANCH.get(step, set()):
         assert _committed(crashed / done), done
+    if step == "torn_violations":
+        assert any((crashed / "out" / "violations").glob("part-*.parquet"))
     manifest = RuleProgressManifest(spark, str(crashed / "manifest"))
-    assert manifest.read().count() == 0
+    assert (manifest.read().count() > 0) == (step == "manifest")
+    before = _files(crashed)
 
     monkeypatch.undo()
     assert run_validation.main(argv(mode, name, "--resume")) == 0
+    if step == "manifest":
+        assert _files(crashed) == before
     for sink in ("violations", "verdicts", "verdict_diff", "span_kind_hist"):
         assert _rows(spark.read.parquet(str(crashed / "out" / sink))) == \
             _rows(spark.read.parquet(str(clean / "out" / sink))), sink
@@ -354,44 +416,6 @@ def test_a_failed_branch_lets_the_others_finish_and_commits_nothing(
         spark, str(clean / "manifest")).read(), stamps)
     csv = spark.read.option("header", True).csv
     assert _rows(csv(str(crashed / "csv"))) == _rows(csv(str(clean / "csv")))
-
-
-def test_a_partial_resume_writes_a_clean_runs_sinks(spark, snapshot_inputs,
-                                                    failure_runs, tmp_path):
-    """A retry after half of the partitions reached every sink and the
-    manifest leaves the sinks equal to a clean run's. The rules still see
-    the whole snapshot, so a doc_id duplicated across a committed and a
-    pending partition is flagged in the pending one as a clean run flags
-    it."""
-    import run_validation
-
-    clean = failure_runs[0] / "full" / "clean"
-
-    def sink(out, name):
-        return spark.read.parquet(str(out / name))
-
-    done = F.col("partition").isin("p0", "p2", "p4", "p6")
-    dups = sink(clean / "out", "violations").filter(
-        "rule_id = 'unique:doc_id'")
-    split = dups.filter(done).select("doc_id").intersect(
-        dups.filter(~done).select("doc_id"))
-    assert split.count() > 0  # the fixture splits a duplicate across the cut
-
-    out, manifest = tmp_path / "out", str(tmp_path / "manifest")
-    for name in ("violations", "verdicts", "metrics"):
-        sink(clean / "out", name).filter(done).write.parquet(str(out / name))
-    RuleProgressManifest(spark, manifest).commit(
-        sink(clean / "out", "metrics").filter(done))
-    assert run_validation.main(snapshot_inputs["full"] + [
-        "--output", str(out), "--manifest", manifest, "--resume"]) == 0
-
-    stamps = ("committed_at", "duration_ms")
-    for name, drop in (("violations", ()), ("verdicts", ()),
-                       ("metrics", stamps)):
-        assert _rows(sink(out, name), drop) == \
-            _rows(sink(clean / "out", name), drop), name
-    assert _rows(RuleProgressManifest(spark, manifest).read(), stamps) == \
-        _rows(sink(clean / "out", "metrics"), stamps)
 
 
 def test_histograms_are_written_through_spark(spark, snapshot_inputs, docs,

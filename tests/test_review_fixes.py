@@ -1,11 +1,10 @@
 """Regression tests for review findings: string-id connected components,
 flat-series forecast branching, overflow-safe trend/mixture arithmetic, and
-idempotent resume appends."""
+session reuse."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from anomaly_detection_spark.functions import curation, graph, risk
 
@@ -79,70 +78,6 @@ def test_domain_mixture_production_magnitudes(spark):
     assert all(r["epochs_micro"] > 0 for r in out.values())
     # web gets more weight than code but less than its 5/6 token share
     assert 500_000 < out["web"]["weight_ppm"] < 834_000
-
-
-def test_append_missing_pairs_idempotent(spark, tmp_path):
-    """Crash-retry convergence: rows already present for a (partition,
-    rule_id) pair are not appended twice; missing pairs are filled in."""
-    from run_validation import append_missing_pairs
-
-    path = str(tmp_path / "verdicts")
-    full = spark.createDataFrame(
-        [("p0", "rA", True, 0), ("p0", "rB", False, 3), ("p1", "rA", True, 0)],
-        ["partition", "rule_id", "pass", "violation_count"])
-    # crashed attempt: only pair (p0, rA) made it to the sink
-    full.filter("partition = 'p0' AND rule_id = 'rA'") \
-        .write.mode("overwrite").parquet(path)
-    # retry recomputes ALL pending pairs and appends idempotently
-    append_missing_pairs(spark, full, path)
-    got = spark.read.parquet(path)
-    assert got.count() == 3
-    assert got.select("partition", "rule_id").distinct().count() == 3
-    # a second full retry changes nothing
-    append_missing_pairs(spark, full, path)
-    assert spark.read.parquet(path).count() == 3
-
-
-def test_append_missing_pairs_matches_a_null_partition(spark, tmp_path):
-    """A pair whose partition is NULL is held by the sink like any other:
-    a retry does not append its rows again."""
-    from run_validation import append_missing_pairs
-
-    path = str(tmp_path / "violations")
-    df = spark.createDataFrame(
-        [(None, "rA", "d1"), (None, "rA", "d2"), ("p0", "rA", "d3")],
-        "partition string, rule_id string, doc_id string")
-    append_missing_pairs(spark, df, path)
-    append_missing_pairs(spark, df, path)
-    assert spark.read.parquet(path).count() == 3
-
-
-def test_append_missing_pairs_creates_sink(spark, tmp_path):
-    from run_validation import append_missing_pairs
-
-    path = str(tmp_path / "fresh")
-    df = spark.createDataFrame([("p0", "rA", 1)],
-                               ["partition", "rule_id", "v"])
-    append_missing_pairs(spark, df, path)
-    assert spark.read.parquet(path).count() == 1
-
-
-def test_append_missing_pairs_propagates_unreadable_sink(spark, tmp_path):
-    """Only an absent sink may skip the dedup. A sink directory that holds
-    parquet without the key columns is not "absent": treating it as such
-    would append every row again on each retry."""
-    from pyspark.errors import AnalysisException
-
-    from run_validation import append_missing_pairs
-
-    path = str(tmp_path / "foreign")
-    spark.createDataFrame([(1,)], ["x"]).write.parquet(path)
-    df = spark.createDataFrame([("p0", "rA", 1)],
-                               ["partition", "rule_id", "v"])
-    with pytest.raises(AnalysisException) as exc:
-        append_missing_pairs(spark, df, path)
-    assert exc.value.getCondition().startswith("UNRESOLVED_COLUMN")
-    assert spark.read.parquet(path).count() == 1
 
 
 def test_get_spark_keeps_the_conf_of_an_existing_session(spark):

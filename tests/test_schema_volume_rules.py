@@ -90,3 +90,18 @@ def test_schema_compat_every_class(spark):
     assert got["loose"] == ("requiredness_loosened", "ok")
     assert got["embedding"] == ("added", "ok")
     assert got["checksum"] == ("added", "breaking")
+
+
+def test_row_count_drift_matches_a_null_partition_to_its_baseline(spark):
+    """A NULL partition is counted against its own baseline count, not as
+    one partition that vanished and another that appeared."""
+    from anomaly_detection_spark.rules.core import RuleContext
+
+    d = spark.createDataFrame(
+        [("d1", None), ("d2", None), ("d3", "p0")],
+        "doc_id string, partition string")
+    assert builtin.row_count_drift(d).build(d, RuleContext()).count() == 0
+    grown = d.unionByName(spark.createDataFrame(
+        [("d4", None), ("d5", None)], "doc_id string, partition string"))
+    assert [(r["partition"], r["detail"]) for r in builtin.row_count_drift(
+        d).build(grown, RuleContext()).collect()] == [(None, "rows 2 -> 4")]

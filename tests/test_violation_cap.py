@@ -190,22 +190,20 @@ def _nulls_first(row):
     return tuple((v is not None, v or "") for v in row)
 
 
-@pytest.mark.parametrize("how", ["plain", "capped", "resume"])
+@pytest.mark.parametrize("how", ["plain", "capped"])
 def test_violations_sink_is_one_file_sorted_by_pair(spark, cli_inputs,
                                                     plain_out, tmp_path, how):
-    """Whichever way main writes violations (overwrite, capped overwrite,
-    resume append after the pair filter), the run writes them as one parquet
-    file for this corpus, clustered by pair and sorted by (partition,
+    """Whether main caps violations or not, the run writes them as one
+    parquet file for this corpus, clustered by pair and sorted by (partition,
     rule_id, doc_id, detail) with NULLs first; rows and verdicts stay those
     of the plain run."""
     import run_validation
-    from anomaly_detection_spark.manifest import RuleProgressManifest
 
     def sink(out, name):
         return spark.read.parquet(f"{out}/{name}")
 
     plain = Counter(tuple(r) for r in sink(plain_out, "violations").collect())
-    out, before, want = plain_out, set(), plain
+    out, want = plain_out, plain
     if how == "capped":
         out = str(tmp_path / "out")
         assert run_validation.main(cli_inputs + [
@@ -214,20 +212,8 @@ def test_violations_sink_is_one_file_sorted_by_pair(spark, cli_inputs,
         for r in sorted(plain.elements(), key=_nulls_first):
             by_pair.setdefault(r[:2], []).append(r)
         want = Counter(r for rows in by_pair.values() for r in rows[:2])
-    elif how == "resume":
-        # a retry after p0..p2 reached every sink and the manifest: the run
-        # appends the other pairs through append_missing_pairs
-        out, manifest = str(tmp_path / "out"), str(tmp_path / "manifest")
-        done = F.col("partition").isin("p0", "p1", "p2")
-        for name in ("violations", "verdicts", "metrics"):
-            sink(plain_out, name).filter(done).write.parquet(f"{out}/{name}")
-        RuleProgressManifest(spark, manifest).commit(
-            sink(plain_out, "metrics").filter(done))
-        before = _parquet_files(f"{out}/violations")
-        assert run_validation.main(cli_inputs + [
-            "--output", out, "--manifest", manifest, "--resume"]) == 0
 
-    written = _parquet_files(f"{out}/violations") - before
+    written = _parquet_files(f"{out}/violations")
     assert len(written) == 1, sorted(written)
     rows = _file_rows(f"{out}/violations/{written.pop()}")
     assert rows and rows == sorted(rows, key=_nulls_first)
