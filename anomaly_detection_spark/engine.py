@@ -53,8 +53,12 @@ VERDICTS_SCHEMA = (
 )
 
 
-def cap_violations(violations: DataFrame, max_per_pair: int,
-                   salt_buckets: int = 16) -> DataFrame:
+#: ways ``cap_violations`` splits a (partition, rule_id) pair in its first
+#: ranking phase
+CAP_SALT_BUCKETS = 16
+
+
+def cap_violations(violations: DataFrame, max_per_pair: int) -> DataFrame:
     """Deterministic exemplar sample: keep at most ``max_per_pair`` violation
     rows per (partition, rule_id), the smallest by (doc_id, detail).
 
@@ -67,17 +71,17 @@ def cap_violations(violations: DataFrame, max_per_pair: int,
 
     Skew-safe two-phase top-k: a hot (partition, rule_id) pair — one rule
     failing on 10^9 docs — would put all its rows in a single window task.
-    Phase 1 ranks within (pair, salt) so the hot pair splits ``salt_buckets``
-    ways and survivors are ≤ salt_buckets × K per pair; phase 2's final rank
-    then runs on that bounded set. Ties (byte-identical rows) are
-    interchangeable, so the output multiset is deterministic even though
-    row_number's choice among them isn't.
+    Phase 1 ranks within (pair, salt) so the hot pair splits
+    ``CAP_SALT_BUCKETS`` ways and survivors are ≤ CAP_SALT_BUCKETS × K per
+    pair; phase 2's final rank then runs on that bounded set. Ties
+    (byte-identical rows) are interchangeable, so the output multiset is
+    deterministic even though row_number's choice among them isn't.
     """
     from pyspark.sql.window import Window
 
     order = [F.asc_nulls_first("doc_id"), F.asc_nulls_first("detail")]
     # hash the payload, not a partition id: spread must be layout-independent
-    salt = F.pmod(F.xxhash64("doc_id", "detail"), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64("doc_id", "detail"), F.lit(CAP_SALT_BUCKETS))
     w_local = Window.partitionBy("partition", "rule_id", "_s").orderBy(*order)
     w_final = Window.partitionBy("partition", "rule_id").orderBy(*order)
     pruned = (

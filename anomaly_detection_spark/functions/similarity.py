@@ -273,9 +273,11 @@ def ann_recall(truth: DataFrame, variant: DataFrame, name: str) -> DataFrame:
     Scale shape: ground truth is only ever computed on a QUERY SAMPLE
     (n_queries·k rows — broadcast-sized however big the corpus), so the
     pair-key left join here is against a tiny frame; the variant side is
-    the ANN output already restricted to the same sample."""
+    the ANN output already restricted to the same sample. A pair the
+    variant returns twice is one hit."""
     t = truth.select("query_id", "neighbor_id")
-    v = variant.select("query_id", "neighbor_id").withColumn("_hit", F.lit(1))
+    v = variant.select("query_id", "neighbor_id").distinct() \
+        .withColumn("_hit", F.lit(1))
     j = t.join(v, ["query_id", "neighbor_id"], "left")
     return j.agg(
         F.countDistinct("query_id").alias("n_queries"),

@@ -97,12 +97,6 @@ def violation_trends(metrics: DataFrame, min_snapshots: int = 3) -> DataFrame:
     )
 
 
-#: DDL of ``verdict_diff``'s rows
-VERDICT_DIFF_SCHEMA = (
-    "partition string, rule_id string, status string, violation_delta long"
-)
-
-
 def verdict_diff(cur: DataFrame, prev: DataFrame) -> DataFrame:
     """Snapshot-over-snapshot diff of two verdict matrices — the ops view
     the reference's history tracker answers ("what broke since last run?",

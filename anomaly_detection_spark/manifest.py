@@ -39,7 +39,10 @@ class RuleProgressManifest:
     def read(self) -> DataFrame:
         """Every committed row; empty only when no commit exists yet. Any
         other read error propagates: an empty manifest would silently turn
-        a resume into a full re-evaluation."""
+        a resume into a full re-evaluation. The empty frame has no
+        partitions, so a plan that reads it (the report's trends before the
+        first commit) runs no task for it: a frame of local Python rows
+        would start Python workers that then stay alive."""
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
                 os.path.join(self.path, "*", "*.parquet")
@@ -47,7 +50,8 @@ class RuleProgressManifest:
         except AnalysisException as exc:
             if exc.getCondition() != "PATH_NOT_FOUND":
                 raise
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), MANIFEST_SCHEMA)
 
     def commit(self, metrics: DataFrame) -> None:
         """Append one commit's metrics. Each commit lands in its own

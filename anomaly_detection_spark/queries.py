@@ -9061,8 +9061,8 @@ def _recall_leg_sql(name: str, v: str) -> str:
         " THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,"
         " CAST((SUM(CASE WHEN " + v + ".neighbor_id IS NOT NULL"
         " THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS recall_ppm"
-        " FROM truth t LEFT JOIN " + v
-        + " ON t.query_id = " + v + ".query_id"
+        " FROM truth t LEFT JOIN (SELECT DISTINCT query_id, neighbor_id FROM "
+        + v + ") " + v + " ON t.query_id = " + v + ".query_id"
         " AND t.neighbor_id = " + v + ".neighbor_id"
     )
 

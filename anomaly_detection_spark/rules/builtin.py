@@ -893,8 +893,7 @@ def psi_drift_from_hist(base_hist: DataFrame, threshold: float = 0.25,
         # the store may hold one subdir per committed snapshot (idempotent
         # incremental writes); fold them here — counts are additive, and a
         # single-histogram store reduces to the identity
-        base = base_hist.groupBy("partition", "bin").agg(
-            F.sum("count").alias("count"))
+        base = _drift.merge_histograms(base_hist)
         return _drift.psi(cur, base).filter(
             F.col("psi") > threshold
         ).select(

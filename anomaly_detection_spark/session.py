@@ -29,12 +29,16 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; under
     spark-submit the cluster manager's master wins (we never override an
-    externally provided master).
+    externally provided master). Unset, ``SPARK_GRAFT_CPUS`` is the number
+    of cores this process may run on, and ``SPARK_GRAFT_DRIVER_MEM`` a
+    quarter of the host's physical memory.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
@@ -62,7 +66,8 @@ def get_spark(
         # local[N] runs the whole engine in the driver JVM; the 1g default
         # OOMs well before the bench scale. Only read at JVM launch — a
         # no-op under spark-submit, where executor memory is cluster-managed.
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                              f"{host_mb // 4}m"),
         # Arrow transfer for every pandas_udf / applyInPandas / mapInPandas.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",

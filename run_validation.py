@@ -206,24 +206,25 @@ def start_branch(pool, spark, steps) -> Future:
     return pool.submit(inheritable_thread_target(spark)(branch))
 
 
-def read_checkpoint(spark, path: str, schema: str, what: str):
-    """The parquet files under ``path``, read with the DDL ``schema`` into an
-    eager ``localCheckpoint``. No plan of the run reads those files again,
-    so an output that rewrites them (the verdicts sink may be its own
-    --diff-prev, the histogram store its own --baseline-hist) neither loses
-    the rows nor re-caches a cached plan that reads them (a write re-caches
-    every plan that reads its path). With a schema, a directory without
-    files would read as empty: it raises FileNotFoundError instead."""
+def read_rows(spark, path: str, schema: str, what: str):
+    """The rows of the parquet files under ``path``, read with the DDL
+    ``schema`` in one Spark job into a local relation that the JVM builds
+    (the rows never cross into Python). No plan of the run names those files
+    then, so an output that rewrites them (the verdicts sink may be its own
+    --diff-prev, the histogram store its own --baseline-hist) neither
+    changes the rows nor refreshes a cached plan that reads them (a write
+    refreshes every cached plan that reads its path), and nothing is
+    persisted. The rows keep the read's schema, with a discovered partition
+    column (the histogram store's ``snapshot``). With a schema, a directory
+    without files would read as empty: it raises FileNotFoundError
+    instead."""
+    from pyspark.sql import DataFrame
+
     df = spark.read.schema(schema).parquet(path)
     if not df.inputFiles():
         raise FileNotFoundError(f"{path}: no {what} files")
-    return df.localCheckpoint()
-
-
-def release_checkpoint(df) -> None:
-    """Unpersist the RDD that ``df.localCheckpoint()`` stored: the frame's
-    own ``unpersist`` does not reach it."""
-    df._jdf.queryExecution().logical().rdd().unpersist(False)
+    return DataFrame(spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()), spark)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -240,10 +241,10 @@ def main(argv: list[str] | None = None) -> int:
 
     # only stop a session this run created: an embedding caller (tests, a
     # notebook driving several snapshots) keeps its own session alive
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
     owns_session = SparkSession.getActiveSession() is None
-    base_hist = None
     spark = get_spark(app_name=f"validate:{args.snapshot_id}")
     docs = read_table(
         spark, args.input, fmt=args.format,
@@ -281,9 +282,12 @@ def main(argv: list[str] | None = None) -> int:
         # whole baseline state the PSI check needs (metadata-sized)
         from anomaly_detection_spark.drift import SPAN_KIND_HIST_SCHEMA
 
-        base_hist = read_checkpoint(spark, args.baseline_hist,
-                                    SPAN_KIND_HIST_SCHEMA, "histogram")
-        rules.add(builtin.psi_drift_from_hist(base_hist))
+        rules.add(builtin.psi_drift_from_hist(read_rows(
+            spark, args.baseline_hist, SPAN_KIND_HIST_SCHEMA, "histogram")))
+    # read before the grid action: a missing directory fails before any rule
+    # runs, and the verdicts sink may overwrite these files
+    prev_verdicts = read_rows(spark, args.diff_prev, VERDICTS_SCHEMA,
+                              "verdicts") if args.diff_prev else None
     if args.expect_schema:
         import json as _json
 
@@ -332,32 +336,25 @@ def main(argv: list[str] | None = None) -> int:
             "header", True).csv(args.export_csv)
 
     def write_verdicts() -> None:
-        """The verdicts sink, then the diff against --diff-prev. That
-        directory may be this sink's own, so it is checkpointed before the
-        overwrite and released however the branch ends."""
-        prev = None
-        try:
-            if args.diff_prev:
-                prev = read_checkpoint(spark, args.diff_prev,
-                                       VERDICTS_SCHEMA, "verdicts")
-            if pending:
-                write_sink("verdicts", result.verdicts)
-            if prev is not None:
-                write_verdict_diff(prev)
-        finally:
-            if prev is not None:
-                release_checkpoint(prev)
+        """The verdicts sink, then the diff against --diff-prev, whose rows
+        were read before the sink may have overwritten their files."""
+        if pending:
+            write_sink("verdicts", result.verdicts)
+        if prev_verdicts is not None:
+            write_verdict_diff()
 
-    def write_verdict_diff(prev) -> None:
+    def write_verdict_diff() -> None:
         """Diff the current verdict sink (on a resume of a committed
-        snapshot, the committed run's: this run wrote none) against
-        ``prev``, the materialized --diff-prev verdicts."""
+        snapshot, the committed run's: this run wrote none) against the
+        --diff-prev rows, and observe the diff's statuses in ``diff_seen``
+        as the rows are written, for the report."""
         from anomaly_detection_spark.history import verdict_diff
 
         cur = spark.read.schema(VERDICTS_SCHEMA).parquet(
             f"{args.output}/verdicts")
-        verdict_diff(cur, prev).write.mode("overwrite").parquet(
-            f"{args.output}/verdict_diff")
+        verdict_diff(cur, prev_verdicts).observe(
+            diff_seen, F.collect_list("status").alias("status")
+        ).write.mode("overwrite").parquet(f"{args.output}/verdict_diff")
 
     def write_histograms() -> None:
         """Persist the scanned rows' span-kind histogram under
@@ -372,8 +369,6 @@ def main(argv: list[str] | None = None) -> int:
         scan overwrites only its own subdir (dynamic partition overwrite),
         so re-running snapshot S never double-folds it. The Spark writer
         does both, on any filesystem Spark writes to."""
-        from pyspark.sql import functions as F
-
         from anomaly_detection_spark import drift as _drift
 
         _drift.span_kind_histogram(docs, "partition").withColumn(
@@ -389,8 +384,6 @@ def main(argv: list[str] | None = None) -> int:
         broadcast-converts when small), plus docs with NULL doc_id — they
         can never be matched to a violation row, and an untrackable doc
         must not ship to training via route=clean."""
-        from pyspark.sql import functions as F
-
         bad_ids = (
             read_violations()
             .select("doc_id").filter(F.col("doc_id").isNotNull())
@@ -432,8 +425,6 @@ def main(argv: list[str] | None = None) -> int:
         run's sketches — the rename classification: equal sketches with
         different names are RENAMES, which schema_match can only report as
         a drop + an add."""
-        from pyspark.sql import functions as F
-
         from anomaly_detection_spark.profiler import content_fingerprint
 
         cols = [c.strip() for c in args.fingerprint_cols.split(",")
@@ -478,101 +469,13 @@ def main(argv: list[str] | None = None) -> int:
             ).write.mode("overwrite").parquet(
                 f"{args.output}/checksum_reconcile")
 
-    if args.preflight is not None:
-        # triage BEFORE paying for the full scan: row rules fused into one
-        # agg pass over a deterministic md5-bucket sample of the corpus
-        from pyspark.sql import functions as F
-
-        from anomaly_detection_spark.engine import sampled_violation_rates
-
-        pre = sampled_violation_rates(
-            docs, rules.row_rules, run.ctx, sample_pct=args.preflight)
-        pre.write.mode("overwrite").parquet(f"{args.output}/preflight")
-        worst = (
-            spark.read.parquet(f"{args.output}/preflight")
-            .orderBy(F.desc("est_ppm"), "partition", "rule_id")
-            .limit(1).collect()
-        )
-        if worst:
-            w = worst[0]
-            print(f"PREFLIGHT pct={args.preflight} "
-                  f"worst={w['partition']}/{w['rule_id']} "
-                  f"est_ppm={w['est_ppm']} sample_n={w['sample_n']}")
-        else:
-            print(f"PREFLIGHT pct={args.preflight} empty-sample")
-        if args.preflight_only:
-            if base_hist is not None:
-                release_checkpoint(base_hist)
-            if owns_session:
-                spark.stop()
-            return 0
-
-    # Write order is the resume contract: data first, manifest last. The
-    # commit is the run's one atomic point: a crash before it leaves the
-    # snapshot uncommitted, and the retry runs it in full and overwrites
-    # every sink, a torn one included; a --resume of a committed snapshot
-    # writes no sink (``pending`` is false) and commits nothing.
-    # The outputs are written by up to four concurrent branches, each a
-    # sequence of steps on one driver thread; no branch reads another's
-    # output, and the manifest is committed only after every branch has
-    # finished without error (a failure is re-raised once every branch has
-    # finished, and then nothing is committed):
-    # - input-only: histograms, fingerprints, checksums. They read only the
-    #   input, so they start before the grid action (the --baseline-hist
-    #   they may rewrite is a checkpoint by then);
-    # - violations: the sink, then the outputs that read it back (CSV
-    #   export, quarantine, co-occurrence, slices);
-    # - verdicts: the sink, then the --diff-prev verdict diff;
-    # - metrics: the sink.
-    # Each branch thread inherits the caller's Spark job group and tags.
-    # The violations sink is laid out where it meets the writer, after the
-    # cap: its file count follows bytes, not the partitions of the rule
-    # branches that produced it (cluster_violations).
-    input_steps = [step for flag, step in (
-        (args.emit_histograms, write_histograms),
-        (args.fingerprint_cols, write_fingerprints),
-        (args.emit_checksums, write_checksums)) if flag]
-    result = None
-    try:
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            branches = []
-            if input_steps:
-                branches.append(start_branch(pool, spark, input_steps))
-            result = run.run(resume=args.resume, commit_manifest=False)
-            pending = bool(result.grid) or not args.resume
-
-            violation_steps = [step for flag, step in (
-                (pending, write_violations),
-                (args.export_csv, export_csv),
-                (args.quarantine, write_quarantine),
-                (args.cooccurrence_report, write_cooccurrence),
-                (args.slice_dims, write_slices)) if flag]
-            if violation_steps:
-                branches.append(start_branch(pool, spark, violation_steps))
-            if pending or args.diff_prev:
-                branches.append(start_branch(pool, spark, [write_verdicts]))
-            if pending:
-                branches.append(start_branch(
-                    pool, spark,
-                    [lambda: write_sink("metrics", result.metrics)]))
-            # the first failure in submission order is raised; leaving the
-            # pool waits for every other branch before it propagates
-            for branch in branches:
-                branch.result()
-        if manifest is not None and result.grid:
-            manifest.commit(result.metrics)
-    finally:
-        if result is not None:
-            result.verdicts.unpersist()
-            result.violations.unpersist()
-        if base_hist is not None:
-            release_checkpoint(base_hist)
-
-    n_fail = sum(not r["pass"] for r in result.grid)
-    if args.report_json:
-        # S4: small driver-side JSON summary — per-rule and per-partition
-        # roll-ups of this run's verdict grid, never per-row data
+    def write_report(n_fail) -> None:
+        """S4: small driver-side JSON summary — per-rule and per-partition
+        roll-ups of this run's verdict grid, never per-row data — built
+        from what the run holds: the grid, the manifest history plus this
+        run's metrics, and the statuses the verdict diff was written with."""
         import json
+        from collections import Counter
         from itertools import groupby
 
         def rollup(key):
@@ -609,29 +512,111 @@ def main(argv: list[str] | None = None) -> int:
         report = {"snapshot_id": args.snapshot_id, "failing_pairs": n_fail,
                   "rules": per_rule, "partitions": per_part}
         if manifest is not None:
-            # trend direction over the manifest's snapshot history (needs
-            # ≥3 committed snapshots per pair; empty until then)
+            # trend direction over the manifest's snapshot history as the
+            # commit will leave it (needs ≥3 committed snapshots per pair;
+            # empty until then)
             from anomaly_detection_spark.history import violation_trends
 
             report["trends"] = [
                 r.asDict()
-                for r in violation_trends(manifest.read())
+                for r in violation_trends(
+                    manifest.read().unionByName(result.metrics))
                 .orderBy("partition", "rule_id").collect()
             ]
-        if args.diff_prev:
-            from pyspark.sql import functions as F
-
-            from anomaly_detection_spark.history import VERDICT_DIFF_SCHEMA
-
-            diff = spark.read.schema(VERDICT_DIFF_SCHEMA).parquet(
-                f"{args.output}/verdict_diff")
-            report["verdict_diff"] = {
-                r["status"]: r["n"]
-                for r in diff.groupBy("status").agg(
-                    F.count("*").alias("n")).collect()
-            }
+        if prev_verdicts is not None:
+            report["verdict_diff"] = dict(Counter(diff_seen.get["status"]))
         with open(args.report_json, "w") as fh:
             json.dump(report, fh, indent=2)
+
+    if args.preflight is not None:
+        # triage BEFORE paying for the full scan: row rules fused into one
+        # agg pass over a deterministic md5-bucket sample of the corpus
+        from anomaly_detection_spark.engine import sampled_violation_rates
+
+        pre = sampled_violation_rates(
+            docs, rules.row_rules, run.ctx, sample_pct=args.preflight)
+        pre.write.mode("overwrite").parquet(f"{args.output}/preflight")
+        worst = (
+            spark.read.parquet(f"{args.output}/preflight")
+            .orderBy(F.desc("est_ppm"), "partition", "rule_id")
+            .limit(1).collect()
+        )
+        if worst:
+            w = worst[0]
+            print(f"PREFLIGHT pct={args.preflight} "
+                  f"worst={w['partition']}/{w['rule_id']} "
+                  f"est_ppm={w['est_ppm']} sample_n={w['sample_n']}")
+        else:
+            print(f"PREFLIGHT pct={args.preflight} empty-sample")
+        if args.preflight_only:
+            if owns_session:
+                spark.stop()
+            return 0
+
+    # Write order is the resume contract: data first, manifest last. The
+    # commit is main's last step and the run's one atomic point: a crash
+    # before it leaves the snapshot uncommitted, and the retry runs it in
+    # full and overwrites every output, a torn one and the report included;
+    # a --resume of a committed snapshot writes no sink (``pending`` is
+    # false) and commits nothing.
+    # The outputs are written by up to four concurrent branches, each a
+    # sequence of steps on one driver thread; no branch reads another's
+    # output. Once every branch has finished without error (a failure is
+    # re-raised once every branch has finished, and then nothing is
+    # written after it), the report is written, then the manifest committed:
+    # - input-only: histograms, fingerprints, checksums. They read only the
+    #   input, so they start before the grid action (the --baseline-hist
+    #   rows they may rewrite were read into the JVM before);
+    # - violations: the sink, then the outputs that read it back (CSV
+    #   export, quarantine, co-occurrence, slices);
+    # - verdicts: the sink, then the --diff-prev verdict diff;
+    # - metrics: the sink.
+    # Each branch thread inherits the caller's Spark job group and tags.
+    # The violations sink is laid out where it meets the writer, after the
+    # cap: its file count follows bytes, not the partitions of the rule
+    # branches that produced it (cluster_violations).
+    input_steps = [step for flag, step in (
+        (args.emit_histograms, write_histograms),
+        (args.fingerprint_cols, write_fingerprints),
+        (args.emit_checksums, write_checksums)) if flag]
+    diff_seen = Observation()
+    result = None
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            branches = []
+            if input_steps:
+                branches.append(start_branch(pool, spark, input_steps))
+            result = run.run(resume=args.resume, commit_manifest=False)
+            pending = bool(result.grid) or not args.resume
+
+            violation_steps = [step for flag, step in (
+                (pending, write_violations),
+                (args.export_csv, export_csv),
+                (args.quarantine, write_quarantine),
+                (args.cooccurrence_report, write_cooccurrence),
+                (args.slice_dims, write_slices)) if flag]
+            if violation_steps:
+                branches.append(start_branch(pool, spark, violation_steps))
+            if pending or prev_verdicts is not None:
+                branches.append(start_branch(pool, spark, [write_verdicts]))
+            if pending:
+                branches.append(start_branch(
+                    pool, spark,
+                    [lambda: write_sink("metrics", result.metrics)]))
+            # the first failure in submission order is raised; leaving the
+            # pool waits for every other branch before it propagates
+            for branch in branches:
+                branch.result()
+        n_fail = sum(not r["pass"] for r in result.grid)
+        if args.report_json:
+            write_report(n_fail)
+        if manifest is not None and result.grid:
+            manifest.commit(result.metrics)
+    finally:
+        if result is not None:
+            result.verdicts.unpersist()
+            result.violations.unpersist()
+
     print(f"VALIDATION_DONE snapshot={args.snapshot_id} failing_pairs={n_fail}")
     if owns_session:
         spark.stop()

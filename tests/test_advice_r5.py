@@ -1,8 +1,9 @@
 """Regression tests for round-5 ADVICE findings: int64-overflow hazards in
 ewma_control's squared 3σ band and ppm prediction and
 spectral_top_direction's renormalizing product, requiredness tightening masked by a simultaneous type widening,
-NULL zone-map envelopes mis-counted as pruned, and int-id wraparound in the
-line-dedup keeper encoding."""
+NULL zone-map envelopes mis-counted as pruned, int-id wraparound in the
+line-dedup keeper encoding, and ann_recall counting a duplicated variant pair
+twice."""
 
 from __future__ import annotations
 
@@ -104,3 +105,17 @@ def test_line_dedup_int_ids_above_2148_attribute_correctly(spark):
     assert got[2_000_000_000]["kept_lines"] == 0
     assert got[6000]["removed_lines"] == 1
     assert got[5000]["removed_tokens"] == 0
+
+
+def test_ann_recall_counts_a_duplicated_variant_pair_once(spark):
+    """A variant that returns one (query, neighbor) pair twice hits one true
+    pair once: the duplicate used to double both the hit and the truth row
+    it joined, reading 2 of 3 for a recall of 1 of 2."""
+    from anomaly_detection_spark.functions.similarity import ann_recall
+
+    truth = spark.createDataFrame([(1, 2), (1, 3)], ["query_id", "neighbor_id"])
+    variant = spark.createDataFrame([(1, 2), (1, 2)],
+                                    ["query_id", "neighbor_id"])
+    got = ann_recall(truth, variant, "dup").collect()[0].asDict()
+    assert got == {"variant": "dup", "n_queries": 1, "n_truth": 2,
+                   "n_hits": 1, "recall_ppm": 500_000}

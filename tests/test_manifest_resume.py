@@ -68,6 +68,15 @@ def test_manifest_read_propagates_errors_other_than_absent_path(spark):
         RuleProgressManifest(spark, "nosuchfs://b/m").read().count()
 
 
+def test_a_manifest_without_commits_reads_as_no_partitions(spark, tmp_path):
+    """A manifest that was never committed reads as an empty frame with no
+    partitions: a plan over it runs no task for it, so it starts no Python
+    worker."""
+    empty = RuleProgressManifest(spark, str(tmp_path / "manifest")).read()
+    assert empty.count() == 0
+    assert empty._jdf.rdd().getNumPartitions() == 0
+
+
 def test_duration_ms_times_the_grid_action(spark, docs):
     """duration_ms is the execution time of the grid action, so a dataset
     rule that sleeps while it runs shows up in it in full."""
@@ -152,12 +161,18 @@ def test_main_resume_of_a_committed_snapshot_runs_no_rule(spark, main_args,
     assert os.listdir(manifest.path) == commits
 
 
-def test_main_releases_its_caches(spark, main_args):
+def test_main_releases_its_caches(spark, main_args, monkeypatch):
     """main unpersists the violations and the verdict grid it cached: no
     RDD it persisted is still registered when it returns. (Compared by id,
     not by count: the registry holds RDDs weakly, so other tests' leftovers
     may be collected while main runs.)"""
     import run_validation
+
+    def checkpoint(self, *args, **kwargs):
+        raise AssertionError("main checkpoints no frame")
+
+    # the session's own DataFrame class, which overrides the generic one's
+    monkeypatch.setattr(type(spark.range(0)), "localCheckpoint", checkpoint)
 
     def persisted():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
@@ -165,8 +180,8 @@ def test_main_releases_its_caches(spark, main_args):
     before = persisted()
     assert run_validation.main(main_args) == 0
     assert persisted() - before == set()
-    # --diff-prev is checkpointed before the verdicts sink is overwritten,
-    # and released with the grid caches
+    # --diff-prev is read into a local relation before the verdicts sink is
+    # overwritten, and leaves nothing persisted
     out = main_args[main_args.index("--output") + 1]
     assert run_validation.main(
         main_args + ["--diff-prev", f"{out}/verdicts"]) == 0
@@ -188,8 +203,10 @@ def _rows(df, drop=()):
 
 def test_diff_prev_may_name_this_runs_own_verdicts(spark, main_args, tmp_path):
     """A run whose --diff-prev is its own verdicts directory diffs against
-    that directory as it was before the run overwrote it."""
+    that directory as it was before the run overwrote it, and its report
+    counts the statuses of the diff it wrote."""
     import json
+    from collections import Counter
 
     import run_validation
 
@@ -200,9 +217,12 @@ def test_diff_prev_may_name_this_runs_own_verdicts(spark, main_args, tmp_path):
     contract.write_text(json.dumps([["bogus_col", "int"]]))
     assert run_validation.main(main_args + [
         "--snapshot-id", "s2", "--expect-schema", str(contract),
-        "--diff-prev", str(tmp_path / "out" / "verdicts")]) == 0
+        "--diff-prev", str(tmp_path / "out" / "verdicts"),
+        "--report-json", str(tmp_path / "report.json")]) == 0
     diff = {(r["partition"], r["rule_id"]): r["status"] for r in
             spark.read.parquet(str(tmp_path / "out" / "verdict_diff")).collect()}
+    report = json.loads((tmp_path / "report.json").read_text())
+    assert report["verdict_diff"] == dict(Counter(diff.values()))
     # schema_match was not in the first grid and fails everywhere now
     schema = {k: v for k, v in diff.items() if k[1] == "schema_match"}
     assert schema and set(schema.values()) == {"new_failure"}
@@ -212,14 +232,47 @@ def test_diff_prev_may_name_this_runs_own_verdicts(spark, main_args, tmp_path):
         for k, ok in first.items()}
 
 
+def test_a_failed_report_commits_nothing(spark, main_args, tmp_path,
+                                         monkeypatch):
+    """The report is written before the manifest commit: a run whose report
+    fails commits nothing, so the --resume that follows runs the snapshot
+    in full and writes the report a clean run writes (not the report of
+    the empty grid of a committed snapshot)."""
+    import json
+
+    import run_validation
+    from anomaly_detection_spark import history
+
+    def failing(*args, **kwargs):
+        raise RuntimeError("injected report failure")
+
+    report = tmp_path / "report.json"
+    monkeypatch.setattr(history, "violation_trends", failing)
+    with pytest.raises(RuntimeError, match="injected report failure"):
+        run_validation.main(main_args + ["--report-json", str(report)])
+    assert RuleProgressManifest(
+        spark, str(tmp_path / "manifest")).read().count() == 0
+
+    monkeypatch.undo()
+    assert run_validation.main(
+        main_args + ["--report-json", str(report), "--resume"]) == 0
+    clean = tmp_path / "clean"
+    assert run_validation.main(main_args + [
+        "--output", str(clean / "out"), "--manifest", str(clean / "manifest"),
+        "--report-json", str(clean / "report.json")]) == 0
+    resumed = json.loads(report.read_text())
+    assert resumed["failing_pairs"] > 0
+    assert resumed == json.loads((clean / "report.json").read_text())
+
+
 def test_main_reads_its_own_sinks_back_with_their_schema(spark, main_args,
                                                          tmp_path,
                                                          monkeypatch):
     """Every read-back of a sink this run wrote under --output (the verdicts
-    for the diff, the diff for the report, the violations for the CSV
-    export, quarantine, co-occurrence and slices) carries the sink's schema,
-    and so does the --diff-prev read, so no read starts a schema-inference
-    job."""
+    for the diff, the violations for the CSV export, quarantine,
+    co-occurrence and slices) carries the sink's schema, and so does the
+    --diff-prev read, so no read starts a schema-inference job. The report
+    reads nothing back: it counts the diff as the diff is written."""
     import run_validation
     from pyspark.sql.readwriter import DataFrameReader
 
@@ -249,8 +302,7 @@ def test_main_reads_its_own_sinks_back_with_their_schema(spark, main_args,
         "--emit-histograms"]) == 0
     out = str(tmp_path / "out") + "/"
     own = [(p[len(out):], has) for p, has in reads if p.startswith(out)]
-    assert sorted(p for p, _ in own) == ["verdict_diff", "verdicts"] + [
-        "violations"] * 4
+    assert sorted(p for p, _ in own) == ["verdicts"] + ["violations"] * 4
     assert all(has for _, has in own), own
     assert [(p, has) for p, has in reads if p == prev] == [(prev, True)]
 
@@ -458,6 +510,7 @@ def _check_drift_against_own_histogram_store(spark, docs, main_args,
     ``ValidationRun.run`` / ``start_branch``). The run's drift verdicts must
     be those against the baseline as it was when the run started, in the
     grid, the three grid sinks and the manifest alike."""
+    import re
     from collections import Counter
 
     import run_validation
@@ -479,6 +532,11 @@ def _check_drift_against_own_histogram_store(spark, docs, main_args,
     def verdicts(df):
         return _rows(df.filter(psi).select(*cols))
 
+    # the grid plan reads the baseline from a local relation, not from the
+    # files of the store
+    plan = "\n".join(_leaves(results[0].verdicts))
+    assert re.search(r"LocalTableScan \[partition#\d+, bin#\d+, count#", plan)
+    assert "span_kind_hist" not in plan
     grid = Counter(tuple(r[c] for c in cols) for r in results[0].grid
                    if r["rule_id"] == "drift_psi:span_kind")
     assert sum(grid.values()) == 8

@@ -29,6 +29,54 @@ def _build_engine_zip(base: str) -> str:
     return zip_path
 
 
+class _Builder:
+    """Stands in for ``SparkSession.builder``: records the master and the
+    conf that ``get_spark`` asks for, and starts no JVM."""
+
+    def __init__(self):
+        self.master_url, self.conf = None, {}
+
+    def appName(self, name):
+        return self
+
+    def master(self, url):
+        self.master_url = url
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self
+
+
+def test_an_unconfigured_session_is_sized_from_the_host(monkeypatch):
+    """Without SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM, a session that
+    get_spark creates runs on this process's cores with a quarter of the
+    host's physical memory as its heap; either variable overrides."""
+    from pyspark.sql import SparkSession
+
+    from anomaly_detection_spark.session import get_spark
+
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: None)
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
+                "PYSPARK_GATEWAY_PORT", "SPARK_MASTER"):
+        monkeypatch.delenv(var, raising=False)
+    monkeypatch.setattr(SparkSession, "builder", _Builder())
+    built = get_spark()
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert built.master_url == f"local[{len(os.sched_getaffinity(0))}]"
+    assert built.conf["spark.driver.memory"] == f"{host_mb // 4}m"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    monkeypatch.setattr(SparkSession, "builder", _Builder())
+    built = get_spark()
+    assert built.master_url == "local[3]"
+    assert built.conf["spark.driver.memory"] == "2g"
+
+
 @pytest.mark.skipif(spark_submit is None, reason="spark-submit not on PATH")
 def test_spark_submit_master_is_respected():
     """get_spark() must NOT override the master provided by spark-submit:
