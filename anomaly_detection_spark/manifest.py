@@ -20,7 +20,6 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,21 +36,24 @@ class RuleProgressManifest:
         self.path = path
 
     def read(self) -> DataFrame:
-        """Every committed row; empty only when no commit exists yet. Any
-        other read error propagates: an empty manifest would silently turn
-        a resume into a full re-evaluation. The empty frame has no
-        partitions, so a plan that reads it (the report's trends before the
-        first commit) runs no task for it: a frame of local Python rows
-        would start Python workers that then stay alive."""
-        try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
-                os.path.join(self.path, "*", "*.parquet")
-            )
-        except AnalysisException as exc:
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.emptyRDD(), MANIFEST_SCHEMA)
+        """Every committed row; empty only when no commit file exists yet.
+        Any other error (a filesystem that cannot be listed, a read that
+        fails) propagates: an empty manifest would silently turn a resume
+        into a full re-evaluation.
+
+        The commit files are listed before the read, so a manifest without
+        one builds no read whose analysis fails: once a session has used an
+        ``Observation`` (the verdict diff), Spark's listener re-analyses such
+        a query and logs an error for it. The empty frame has no partitions,
+        so a plan that reads it (the report's trends before the first
+        commit) runs no task for it: a frame of local Python rows would start
+        Python workers that then stay alive."""
+        pattern = os.path.join(self.path, "*", "*.parquet")
+        sc = self.spark.sparkContext
+        glob = sc._jvm.org.apache.hadoop.fs.Path(pattern)
+        if not glob.getFileSystem(sc._jsc.hadoopConfiguration()).globStatus(glob):
+            return self.spark.createDataFrame(sc.emptyRDD(), MANIFEST_SCHEMA)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(pattern)
 
     def commit(self, metrics: DataFrame) -> None:
         """Append one commit's metrics. Each commit lands in its own

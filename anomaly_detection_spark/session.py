@@ -32,6 +32,12 @@ def get_spark(
     externally provided master). Unset, ``SPARK_GRAFT_CPUS`` is the number
     of cores this process may run on, and ``SPARK_GRAFT_DRIVER_MEM`` a
     quarter of the host's physical memory.
+
+    A created session does not capture the Python call site of each Column
+    function call (``spark.python.sql.dataFrameDebugging.enabled``): that
+    costs several py4j round trips per call, and a DataFrame error's context
+    then names the failing expression without the Python file and line that
+    built it.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -83,6 +89,9 @@ def get_spark(
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.ui.enabled": "false",
         "spark.sql.session.timeZone": "UTC",
+        # no Python call site recorded in the JVM per Column function call:
+        # several py4j round trips each, thousands per plan built
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

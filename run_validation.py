@@ -24,6 +24,7 @@ The same script runs unchanged at any parallelism; local smoke:
 from __future__ import annotations
 
 import argparse
+import functools
 import sys
 from concurrent.futures import Future, ThreadPoolExecutor
 
@@ -227,6 +228,23 @@ def read_rows(spark, path: str, schema: str, what: str):
         df._jdf.collectAsList(), df._jdf.schema()), spark)
 
 
+@functools.lru_cache(maxsize=None)
+def fixed_rules() -> tuple[tuple, tuple]:
+    """The (row rules, dataset rules) of main's fixed suite, built once per
+    process. The rules are immutable, and a driver that validates one commit
+    after another would otherwise rebuild their Columns, in hundreds of py4j
+    round trips, at every commit. Copy them into a fresh RuleSet: adding a
+    rule to it extends its lists."""
+    from anomaly_detection_spark.rules import builtin
+
+    return (
+        # native span-sequence check, fused into the single row-rule scan
+        tuple(builtin.default_document_rules()
+              + [builtin.no_pii(), builtin.span_sequence_valid_row()]),
+        (builtin.unique("doc_id"), builtin.referential()),
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
@@ -253,15 +271,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     catalog = spark.read.parquet(args.catalog)
 
-    rules = RuleSet(
-        # native span-sequence check, fused into the single row-rule scan
-        row_rules=builtin.default_document_rules()
-        + [builtin.no_pii(), builtin.span_sequence_valid_row()],
-        dataset_rules=[
-            builtin.unique("doc_id"),
-            builtin.referential(),
-        ],
-    )
+    row_rules, dataset_rules = fixed_rules()
+    rules = RuleSet(row_rules=list(row_rules), dataset_rules=list(dataset_rules))
     if args.rules_config:
         from anomaly_detection_spark.rules.config import suite_from_config
 
@@ -469,11 +480,24 @@ def main(argv: list[str] | None = None) -> int:
             ).write.mode("overwrite").parquet(
                 f"{args.output}/checksum_reconcile")
 
+    def collect_trends() -> None:
+        """The report's trend rows, into ``trends``: the trend direction of
+        each pair over the manifest's snapshot history as the commit will
+        leave it, the committed history plus this run's metrics (needs ≥3
+        committed snapshots per pair; empty until then)."""
+        from anomaly_detection_spark.history import violation_trends
+
+        trends.extend(
+            r.asDict() for r in violation_trends(
+                manifest.read().unionByName(result.metrics))
+            .orderBy("partition", "rule_id").collect())
+
     def write_report(n_fail) -> None:
         """S4: small driver-side JSON summary — per-rule and per-partition
         roll-ups of this run's verdict grid, never per-row data — built
-        from what the run holds: the grid, the manifest history plus this
-        run's metrics, and the statuses the verdict diff was written with."""
+        from what the run holds once every branch has finished: the grid,
+        the trends the metrics branch collected and the statuses the verdict
+        diff was written with."""
         import json
         from collections import Counter
         from itertools import groupby
@@ -512,17 +536,7 @@ def main(argv: list[str] | None = None) -> int:
         report = {"snapshot_id": args.snapshot_id, "failing_pairs": n_fail,
                   "rules": per_rule, "partitions": per_part}
         if manifest is not None:
-            # trend direction over the manifest's snapshot history as the
-            # commit will leave it (needs ≥3 committed snapshots per pair;
-            # empty until then)
-            from anomaly_detection_spark.history import violation_trends
-
-            report["trends"] = [
-                r.asDict()
-                for r in violation_trends(
-                    manifest.read().unionByName(result.metrics))
-                .orderBy("partition", "rule_id").collect()
-            ]
+            report["trends"] = trends
         if prev_verdicts is not None:
             report["verdict_diff"] = dict(Counter(diff_seen.get["status"]))
         with open(args.report_json, "w") as fh:
@@ -570,7 +584,9 @@ def main(argv: list[str] | None = None) -> int:
     # - violations: the sink, then the outputs that read it back (CSV
     #   export, quarantine, co-occurrence, slices);
     # - verdicts: the sink, then the --diff-prev verdict diff;
-    # - metrics: the sink.
+    # - metrics: the sink, then the report's trends over the manifest plus
+    #   this run's metrics (--report-json with --manifest), off the tail
+    #   that follows the branches.
     # Each branch thread inherits the caller's Spark job group and tags.
     # The violations sink is laid out where it meets the writer, after the
     # cap: its file count follows bytes, not the partitions of the rule
@@ -579,7 +595,7 @@ def main(argv: list[str] | None = None) -> int:
         (args.emit_histograms, write_histograms),
         (args.fingerprint_cols, write_fingerprints),
         (args.emit_checksums, write_checksums)) if flag]
-    diff_seen = Observation()
+    diff_seen, trends = Observation(), []
     result = None
     try:
         with ThreadPoolExecutor(max_workers=4) as pool:
@@ -599,10 +615,12 @@ def main(argv: list[str] | None = None) -> int:
                 branches.append(start_branch(pool, spark, violation_steps))
             if pending or prev_verdicts is not None:
                 branches.append(start_branch(pool, spark, [write_verdicts]))
-            if pending:
-                branches.append(start_branch(
-                    pool, spark,
-                    [lambda: write_sink("metrics", result.metrics)]))
+            metric_steps = [step for flag, step in (
+                (pending, lambda: write_sink("metrics", result.metrics)),
+                (args.report_json and manifest is not None, collect_trends))
+                if flag]
+            if metric_steps:
+                branches.append(start_branch(pool, spark, metric_steps))
             # the first failure in submission order is raised; leaving the
             # pool waits for every other branch before it propagates
             for branch in branches:

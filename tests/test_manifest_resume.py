@@ -68,13 +68,38 @@ def test_manifest_read_propagates_errors_other_than_absent_path(spark):
         RuleProgressManifest(spark, "nosuchfs://b/m").read().count()
 
 
-def test_a_manifest_without_commits_reads_as_no_partitions(spark, tmp_path):
+def test_a_manifest_without_commits_reads_as_no_partitions(spark, tmp_path,
+                                                          monkeypatch):
     """A manifest that was never committed reads as an empty frame with no
     partitions: a plan over it runs no task for it, so it starts no Python
-    worker."""
-    empty = RuleProgressManifest(spark, str(tmp_path / "manifest")).read()
+    worker. It builds no parquet read either: once a session has used an
+    Observation, Spark's listener re-analyses every query whose analysis
+    failed and logs an error for it, so a read of a missing path must not be
+    tried and caught."""
+    from pyspark.sql import Observation
+    from pyspark.sql.readwriter import DataFrameReader
+
+    seen = Observation()
+    spark.range(3).observe(seen, F.count("*").alias("n")).write.format(
+        "noop").mode("overwrite").save()
+    assert seen.get["n"] == 3
+
+    reads, parquet = [], DataFrameReader.parquet
+
+    def recorded(self, *paths, **kw):
+        reads.extend(paths)
+        return parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recorded)
+    manifest = RuleProgressManifest(spark, str(tmp_path / "manifest"))
+    empty = manifest.read()
     assert empty.count() == 0
     assert empty._jdf.rdd().getNumPartitions() == 0
+    # a commit directory that holds no parquet file yet: no commit either
+    (tmp_path / "manifest" / "commit-0").mkdir(parents=True)
+    (tmp_path / "manifest" / "commit-0" / "_SUCCESS").touch()
+    assert manifest.read().count() == 0
+    assert reads == []
 
 
 def test_duration_ms_times_the_grid_action(spark, docs):
@@ -263,6 +288,60 @@ def test_a_failed_report_commits_nothing(spark, main_args, tmp_path,
     resumed = json.loads(report.read_text())
     assert resumed["failing_pairs"] > 0
     assert resumed == json.loads((clean / "report.json").read_text())
+
+
+def test_the_reports_trends_are_those_of_the_committed_history(
+        spark, main_args, tmp_path):
+    """The trends of a run's report, collected beside its sink writes, are
+    the trends of the manifest history that its commit leaves."""
+    import json
+
+    import run_validation
+    from anomaly_detection_spark.history import violation_trends
+
+    report = tmp_path / "report.json"
+    for sid in ("s1", "s2", "s3"):
+        assert run_validation.main(main_args + [
+            "--snapshot-id", sid, "--report-json", str(report)]) == 0
+    trends = json.loads(report.read_text())["trends"]
+    committed = violation_trends(
+        RuleProgressManifest(spark, str(tmp_path / "manifest")).read())
+    assert trends
+    assert trends == [r.asDict() for r in
+                      committed.orderBy("partition", "rule_id").collect()]
+
+
+def test_main_builds_its_fixed_suite_once_per_process(spark, main_args,
+                                                      tmp_path, monkeypatch):
+    """A second main in the same process reuses the fixed suite the first
+    one built, calls no rule builder, and writes the same verdicts and
+    violations."""
+    import run_validation
+    from anomaly_detection_spark.rules import builtin
+
+    builders = ("default_document_rules", "no_pii", "span_sequence_valid_row",
+                "unique", "referential")
+    calls = {name: 0 for name in builders}
+
+    def counted(name, build):
+        def call(*args, **kwargs):
+            calls[name] += 1
+            return build(*args, **kwargs)
+        return call
+
+    for name in builders:
+        monkeypatch.setattr(builtin, name, counted(name, getattr(builtin, name)))
+    run_validation.fixed_rules.cache_clear()
+    out, runs = tmp_path / "out", []
+    try:
+        for _ in range(2):
+            assert run_validation.main(main_args) == 0
+            runs.append([_rows(spark.read.parquet(str(out / name)))
+                         for name in ("verdicts", "violations")])
+    finally:
+        run_validation.fixed_rules.cache_clear()
+    assert calls == {name: 1 for name in builders}
+    assert runs[0] == runs[1]
 
 
 def test_main_reads_its_own_sinks_back_with_their_schema(spark, main_args,

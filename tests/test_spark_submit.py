@@ -75,6 +75,15 @@ def test_an_unconfigured_session_is_sized_from_the_host(monkeypatch):
     built = get_spark()
     assert built.master_url == "local[3]"
     assert built.conf["spark.driver.memory"] == "2g"
+    # no Python call-site capture on every Column function call
+    assert built.conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
+
+    # a session the caller already built keeps its own conf
+    active, builder = object(), _Builder()
+    monkeypatch.setattr(SparkSession, "getActiveSession", lambda: active)
+    monkeypatch.setattr(SparkSession, "builder", builder)
+    assert get_spark() is active
+    assert builder.conf == {} and builder.master_url is None
 
 
 @pytest.mark.skipif(spark_submit is None, reason="spark-submit not on PATH")
